@@ -1,12 +1,18 @@
 """Benchmark harness (driver contract): run the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
-{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+local[$SPARK_GRAFT_CPUS] (default: every core) and print ONE JSON line:
+{"metric": ..., "value": N, "unit": "sec", "queries": {...},
+"streaming": {...}, "extras": {...}, "sf": ...}.
 
 Headline set = the flagship pipeline + one representative per operator
 family (scan+filter, groupBy-agg, calendar agg, join, window, dedup,
 similarity). Heavy pathological-corpus queries (exact n-gram jaccard) are
 correctness-only and excluded from the headline timing.
+
+Every figure is a min-of-N wall time of a ``count()`` and so moves with
+host load. For A/B comparisons between two checkouts, and for the split
+of a request into build, eager-job and action layers, use
+``perfbench/run.py``, which reads task CPU per request.
 """
 
 from __future__ import annotations
@@ -63,14 +69,29 @@ HEADLINE = [
 ]
 
 
+def _best_of(spark, fn, sf_dir: str, runs: int) -> float:
+    """Min wall time of ``runs`` full executions of one gate. count()
+    forces full execution with no driver materialization; the first run
+    absorbs codegen compilation. Persisted intermediates (LSH signature
+    caches) are dropped afterwards so gates don't inherit each other's
+    memory footprint."""
+    best = float("inf")
+    for _ in range(runs):
+        t0 = time.time()
+        fn(spark, sf_dir).count()
+        best = min(best, time.time() - t0)
+    spark.catalog.clearCache()
+    return best
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("openeo-processes-dask-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -81,9 +102,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as e
+    from openeo_processes_dask_spark.sources.load import load_table
 
     qs = e.queries()
-    timings: dict[str, float] = {}
     # warm-up: JIT/codegen + parquet footer caches, so the first headline
     # numbers aren't dominated by JVM warmup. minhash is included because
     # its 64-min-aggregate plan is the heaviest codegen/optimizer compile
@@ -93,517 +114,35 @@ def main() -> None:
     qs["minhash_near_dups"](spark, sf_dir).count()
     spark.catalog.clearCache()
 
-    # Host-speed calibration (VERDICT r03 #4): a fixed pure-JVM, no-IO,
-    # no-shuffle codegen loop. Engine changes cannot move this number, so
-    # across rounds calibration_sec isolates host noise from code
-    # regressions: if calibration doubles alongside the headline total, the
-    # host slowed down, not the engine. (r4 reference on a quiet host:
-    # ~0.35 s.)
-    cal_best = float("inf")
-    for _ in range(3):
-        t0 = time.time()
-        spark.range(0, 500_000_000, 1, int(cpus)).selectExpr(
-            "sum(id * 2 + 1) AS s"
-        ).collect()
-        cal_best = min(cal_best, time.time() - t0)
-    calibration = round(cal_best, 3)
+    timings = {
+        name: round(_best_of(spark, qs[name], sf_dir, 3), 3)
+        for name in HEADLINE
+    }
 
-    # Second calibration lane (round 6): the ALU loop above tracks CPU
-    # speed but NOT shuffle/exchange cost, and this host's noise hits the
-    # two differently — an interleaved A/B of identical minhash code
-    # measured 2.4-9.8 s for the SAME query in one session while the ALU
-    # calibration barely moved. A fixed small hash-aggregate + exchange
-    # job gives the shuffle-sensitive twin: engine-independent, so a
-    # round-over-round move in a shuffle-heavy query that tracks
-    # calibration_shuffle_sec is the host, not the engine.
-    def shuffle_cal() -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            spark.range(0, 20_000_000, 1, int(cpus)).selectExpr(
-                "id % 1000000 AS k", "id AS v"
-            ).groupBy("k").sum("v").selectExpr("sum(`sum(v)`)").collect()
-            best = min(best, time.time() - t0)
-        return round(best, 3)
-
-    # Third calibration lane (round 11): disk IO. The ALU and shuffle
-    # probes never touch disk, but this VM's storms have an IO
-    # component they are blind to — a 169 s jaccard_prefix execution
-    # (20x steady-state) was measured while BOTH existing calibrations
-    # read 0.9-1.5, i.e. "quiet". localCheckpoint/persist/shuffle-spill
-    # blocks all ride the local filesystem, so a fixed
-    # write+fsync+read of 64 MiB through /tmp makes that stall class
-    # legible. Engine-independent, min-of-3; quiet reference on this
-    # host: ~0.14 s. Originally diagnostic-only; PROMOTED to gate the
-    # retry protocol after the recorded samples calibrated a threshold:
-    # every quiet r11 run read 0.13-0.19 while an IO-side storm (every
-    # headline query 2-3x its clean reference, total 2.36x baseline)
-    # read io_start 1.114 with the shuffle pair QUIET at 1.08/1.19 —
-    # the two lanes separate noise classes, so both must gate.
-    def io_cal() -> float:
-        import tempfile
-
-        buf = b"\x5a" * (8 << 20)
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            with tempfile.NamedTemporaryFile(
-                dir="/tmp", delete=False
-            ) as f:
-                for _ in range(8):
-                    f.write(buf)
-                f.flush()
-                os.fsync(f.fileno())
-                path = f.name
-            with open(path, "rb") as f:
-                while f.read(16 << 20):
-                    pass
-            os.unlink(path)
-            best = min(best, time.time() - t0)
-        return round(best, 3)
-
-    # ---- contention-gated headline loop (VERDICT r10 #1) ----
-    # The r9 and r10 official artifacts violated the 2x gate on their
-    # face (3.09x / 3.76x) purely because THIS shared VM was contended
-    # while the driver recorded them — every quiet-host run of the same
-    # code passed (r10: builder 1.34x, judge 1.51x). Flagging the noise
-    # (noisy_host) was not enough: the gate is scored on the recorded
-    # number. So the bench now REFUSES to hand back a contended pass:
-    #   1. before each headline attempt, the shuffle AND io calibrations
-    #      are re-measured; while EITHER is out of range (> QUIET_CAL /
-    #      > QUIET_IO — the lanes catch different storm classes) the
-    #      bench sleeps 60 s and re-measures, up to _MAX_WAITS times;
-    #   2. the headline loop runs and both calibrations are measured
-    #      again;
-    #   3. the attempt is retried (up to _MAX_ATTEMPTS) if EITHER end
-    #      is out of range in EITHER lane, OR — VERDICT r11 #1 — the
-    #      attempt TOTAL exceeds 1.5x the persisted quiet reference
-    #      (QUIET_TOTAL_SEC): the r11 artifact recorded an 11.7 s
-    #      front-loaded stall with all four bracketing samples quiet,
-    #      so calibration gates alone cannot be the only retry trigger.
-    #      The headline record is then the MIN-TOTAL attempt among
-    #      those whose bracketing samples all pass (ADVICE r11 #2:
-    #      later attempts run with a warm OS page cache, so raw
-    #      min-total could crown a storm-flagged warm attempt over a
-    #      clean cold one); if NO attempt is quiet, raw min-total —
-    #      identical code runs every attempt and contention only ADDS
-    #      time, so the fastest is the least-contended measurement.
-    #      (Selecting by quietest calibration pair alone was tried
-    #      first and picked a 19.1 s storm-inflated loop over a 9.2 s
-    #      clean one, because the bracketing samples can read quiet
-    #      around a storm that lands mid-loop.) The noisy flags come
-    #      from the chosen attempt's own samples;
-    #   4. every attempt (timings + both calibrations) is kept in the
-    #      `attempts` side field, so a forced-noisy artifact still
-    #      carries full telemetry and nothing is silently discarded.
-    # env knobs (documented; the driver uses the defaults): the quiet
-    # threshold is calibrated for local[32] — a smoke run on fewer
-    # cores can raise SPARK_GRAFT_QUIET_CAL to skip the waits
-    # io threshold ~3.5x the 0.14 s quiet reference — cleanly between
-    # the recorded quiet band (0.13-0.19) and the storm reading (1.11)
-    QUIET_IO = float(os.environ.get("SPARK_GRAFT_QUIET_IO", "0.5"))
-    # Core-count scaling (r13): every quiet threshold in this protocol —
-    # QUIET_CAL, the per-gate/total refs — was measured on local[32].
-    # The driver ALSO runs this bench at a LOWER core count to measure
-    # scaling, where the same fixed shuffle-calibration work is spread
-    # over fewer cores (measured: 1.6 s at local[8] vs 1.0-1.3 quiet at
-    # local[32]) and every gate legitimately slows — comparing those
-    # readings against 32-core quiet references would sleep through the
-    # contention waits and record false storm flags/retries on a
-    # perfectly quiet host. No computation slows MORE than linearly in
-    # lost cores, so scaling the CPU-bound thresholds by ref_cpus/cpus
-    # is a sound upper bound that still catches real storms (10-100x).
-    # At the pinned core count the factor is exactly 1.0 — the driver's
-    # main 32-core recording is byte-for-byte the old protocol. The IO
-    # lane is single-threaded and stays unscaled.
-    # r14 (ADVICE r13 #1/#2): refinements, both no-ops at 32 cores —
-    #   1. an explicit SPARK_GRAFT_QUIET_CAL/QUIET_TOTAL env override is
-    #      used AS GIVEN (the r13 code also multiplied overrides by the
-    #      scale factor, double-compensating a user who followed the
-    #      low-core guidance above);
-    #   2. bench_quiet_refs.json may pin MEASURED low-core references
-    #      under "by_cpus" (keyed by the core-count string); when the
-    #      running core count has an entry, its measured values replace
-    #      the worst-case linear bound, restoring the low-core noise
-    #      gate's sensitivity (~1.2x headroom instead of ~3x).
-    _REF_CPUS = 32
-    _CPU_SCALE = max(1.0, _REF_CPUS / max(1.0, float(int(cpus))))
-    _qc_env = os.environ.get("SPARK_GRAFT_QUIET_CAL")
-    QUIET_CAL = float(_qc_env) if _qc_env is not None else 1.3 * _CPU_SCALE
-    _MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "3"))
-    _MAX_WAITS = int(os.environ.get("SPARK_GRAFT_BENCH_WAITS", "4"))
-    # Persisted quiet-host references (VERDICT r11 #1, r12 #1/#7):
-    # bench_quiet_refs.json pins the close-out quiet timings per gate
-    # AND per section, so a mid-loop storm — invisible to the
-    # bracketing calibration samples — is detected mechanically in
-    # EVERY section, not just the headline. The r11 artifact (11.683 s
-    # headline, all flags false) and the r12 artifact (~12 s
-    # jaccard_prefix in the then-unguarded extras loop, quiet
-    # calibrations 1.031/0.157) are the two recorded storm classes.
-    # Updated at each round's close-out from fresh quiet runs.
-    try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "bench_quiet_refs.json")
-        ) as _f:
-            QUIET_REFS = json.load(_f)
-    except OSError:
-        QUIET_REFS = {}
-    # r14 (ADVICE r13 #1): measured references for THIS core count, when
-    # pinned under "by_cpus" — sections present there are used as-is
-    # (scale 1.0); sections absent fall back to the 32-core values under
-    # the linear upper bound.
-    _BY_CPUS = QUIET_REFS.get("by_cpus", {}).get(str(int(cpus)), {})
-
-    def _ref_section(name):
-        """(section dict/value, scale to apply) for a quiet reference."""
-        if name in _BY_CPUS:
-            return _BY_CPUS[name], 1.0
-        return QUIET_REFS.get(name), _CPU_SCALE
-
-    if _qc_env is None and "quiet_cal_sec" in _BY_CPUS:
-        QUIET_CAL = float(_BY_CPUS["quiet_cal_sec"])
-    _qt_env = os.environ.get("SPARK_GRAFT_QUIET_TOTAL")
-    if _qt_env is not None:
-        # explicit override used AS GIVEN (ADVICE r13 #2)
-        QUIET_TOTAL_SEC = float(_qt_env)
-    else:
-        _qt_ref, _qt_scale = _ref_section("headline_total_sec")
-        QUIET_TOTAL_SEC = float(_qt_ref or 9.5) * _qt_scale
-    _ANOMALY_FACTOR = 1.5
-    # a single gate at >2.5x its pinned quiet reference is a storm hit
-    # even when the section TOTAL stays inside the band (r12's 12 s
-    # jaccard_prefix added ~7 s to a ~20 s extras section — under the
-    # 1.5x total gate but 2.4x the gate's own quiet reference)
-    _GATE_ANOMALY_FACTOR = float(
-        os.environ.get("SPARK_GRAFT_QUIET_GATE_FACTOR", "2.5")
-    )
-
-    def run_headline() -> dict[str, float]:
-        t: dict[str, float] = {}
-        for name in HEADLINE:
-            fn = qs[name]
-            # three timed executions, report the min: the first run
-            # absorbs codegen compilation, and this host's VM randomly
-            # stretches single executions 3-10x (measured: the same
-            # query 0.7 s and 2.7 s within one minute), so min-of-3 is
-            # the steady-state number a cluster deployment would see
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.time()
-                # count() forces full execution, no driver materialization
-                fn(spark, sf_dir).count()
-                best = min(best, time.time() - t0)
-            t[name] = round(best, 3)
-            # drop persisted intermediates (LSH signature caches) so
-            # queries don't inherit each other's memory footprint
-            spark.catalog.clearCache()
-        return t
-
-    def _noise(cal: float, io: float) -> float:
-        """Worst lane, normalized to its threshold (1.0 = at gate)."""
-        return max(cal / QUIET_CAL, io / QUIET_IO)
-
-    attempts: list[dict] = []
-    for _attempt in range(_MAX_ATTEMPTS):
-        cal_start, io_start = shuffle_cal(), io_cal()
-        waits = 0
-        while (
-            _noise(cal_start, io_start) > 1.0 and waits < _MAX_WAITS
-        ):
-            time.sleep(60)
-            waits += 1
-            cal_start, io_start = shuffle_cal(), io_cal()
-        t = run_headline()
-        cal_end, io_end = shuffle_cal(), io_cal()
-        _h_sec, _h_scale = _ref_section("headline")
-        _h_refs = {n: v * _h_scale for n, v in (_h_sec or {}).items()}
-        attempts.append(
-            {
-                "cal_start": cal_start,
-                "cal_end": cal_end,
-                "io_start": io_start,
-                "io_end": io_end,
-                "waits_before_start": waits,
-                "total": round(sum(t.values()), 3),
-                # per-gate storm detection against the pinned quiet
-                # references (VERDICT r12 #7) — a single-query stall
-                # can hide inside a passing total
-                "anomalous_gates": [
-                    n for n, v in t.items()
-                    if n in _h_refs
-                    and v > _GATE_ANOMALY_FACTOR * _h_refs[n]
-                ],
-                "timings": t,
-            }
-        )
-        if (
-            _noise(cal_start, io_start) <= 1.0
-            and _noise(cal_end, io_end) <= 1.0
-            # total-anomaly retry (VERDICT r11 #1): a quiet-calibration
-            # attempt whose TOTAL blows past the persisted quiet band is
-            # a mid-loop storm the bracketing samples missed — keep
-            # attempting so min-total gets a real candidate instead of
-            # recording the stall as-is (r11: 11.683 s, all flags false)
-            and attempts[-1]["total"]
-            <= _ANOMALY_FACTOR * QUIET_TOTAL_SEC
-            and not attempts[-1]["anomalous_gates"]
-        ):
-            break
-
-    def _attempt_quiet(a: dict) -> bool:
-        return (
-            _noise(a["cal_start"], a["io_start"]) <= 1.0
-            and _noise(a["cal_end"], a["io_end"]) <= 1.0
-        )
-
-    # Attempt selection (ADVICE r11 #2): min total CAN conflate a warm
-    # OS page cache with quietness — clearCache() only drops Spark's
-    # cache, so a storm-flagged warm attempt may out-time a clean cold
-    # one. Prefer the fastest attempt among those whose bracketing
-    # samples all pass; only when no attempt is quiet fall back to
-    # min total overall (contention only adds time, so among
-    # uniformly-contended attempts the fastest is least contended).
-    clean_attempts = [
-        a for a in attempts
-        if _attempt_quiet(a) and not a["anomalous_gates"]
-    ]
-    quiet_attempts = [a for a in attempts if _attempt_quiet(a)]
-    chosen = min(
-        clean_attempts or quiet_attempts or attempts,
-        key=lambda a: a["total"],
-    )
-    timings = chosen["timings"]
-    calibration_shuffle = chosen["cal_start"]
-    calibration_shuffle_end = chosen["cal_end"]
-    chosen_start_noisy = _noise(chosen["cal_start"], chosen["io_start"]) > 1.0
-    chosen_end_noisy = _noise(chosen["cal_end"], chosen["io_end"]) > 1.0
-
-    # ---- guarded section runner (VERDICT r12 #1): the extras and
-    # streaming sections now get the SAME total-anomaly retry +
-    # prefer-quiet selection the headline loop got in r12, plus a
-    # per-gate trigger against the pinned quiet references — BENCH_r12
-    # recorded a ~12 s jaccard_prefix (quiet reading 4.98 s on
-    # unchanged code) precisely because extras ran once, unguarded.
-    def _run_guarded_section(
-        run, section_total, gate_anoms,
-    ) -> tuple[dict, list[dict]]:
-        """Run ``run()`` under the calibration-bracket + anomaly retry
-        protocol. ``section_total(result) -> float`` and
-        ``gate_anoms(result) -> list[str]`` define the section's
-        anomaly signals (names of gates out of their quiet band).
-        Returns (chosen attempt, all attempts)."""
-        section_attempts: list[dict] = []
-        for _ in range(_MAX_ATTEMPTS):
-            cal_s, io_s = shuffle_cal(), io_cal()
-            waits = 0
-            while _noise(cal_s, io_s) > 1.0 and waits < _MAX_WAITS:
-                time.sleep(60)
-                waits += 1
-                cal_s, io_s = shuffle_cal(), io_cal()
-            result = run()
-            cal_e, io_e = shuffle_cal(), io_cal()
-            section_attempts.append(
-                {
-                    "cal_start": cal_s,
-                    "cal_end": cal_e,
-                    "io_start": io_s,
-                    "io_end": io_e,
-                    "waits_before_start": waits,
-                    "total": round(section_total(result), 3),
-                    "anomalous_gates": gate_anoms(result),
-                    "result": result,
-                }
-            )
-            a = section_attempts[-1]
-            if (
-                _attempt_quiet(a)
-                and not a["anomalous_gates"]
-            ):
-                break
-        # prefer-quiet + no-anomaly selection (same rationale as the
-        # headline: raw min-total can crown a warm-cache storm attempt)
-        clean = [
-            a for a in section_attempts
-            if _attempt_quiet(a) and not a["anomalous_gates"]
-        ]
-        quiet = [a for a in section_attempts if _attempt_quiet(a)]
-        chosen_a = min(
-            clean or quiet or section_attempts, key=lambda a: a["total"]
-        )
-        return chosen_a, section_attempts
-
-    # streaming throughput (VERDICT r02 #7): drain the full events table
-    # through the stateful dedup and sliding-window streams and report
-    # rows/s. Total stays headline-only (comparable with earlier rounds);
-    # the first (untimed) run writes the /tmp stream fixture dir.
-    from openeo_processes_dask_spark.sources.load import load_table
-
+    # streaming throughput: drain the full events table through the
+    # stateful dedup and sliding-window streams and report rows/s. The
+    # first (untimed) run writes the stream fixture dir.
     n_events = load_table(spark, sf_dir, "events").count()
-    _STREAMS = STREAMS
+    streaming = {}
+    for name in STREAMS:
+        qs[name](spark, sf_dir).count()
+        best = _best_of(spark, qs[name], sf_dir, 2)
+        streaming[name + "_rows_per_s"] = round(n_events / best)
 
-    def run_streaming() -> dict[str, float]:
-        st: dict[str, float] = {}
-        for name in _STREAMS:
-            fn = qs[name]
-            fn(spark, sf_dir).count()
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                best = min(best, time.time() - t0)
-            st[name + "_rows_per_s"] = round(n_events / best)
-            # calibration-normalized twin (VERDICT r04 #7): rows/s
-            # scales inversely with host speed while calibration_sec
-            # scales directly, so their product is host-invariant —
-            # across rounds a move in THIS number is the engine, a
-            # move in rows_per_s alone is the VM
-            st[name + "_rows_x_cal"] = round(n_events / best * calibration)
-            spark.catalog.clearCache()
-        return st
-
-    _s_sec, _s_scale = _ref_section("streaming_rows_per_s")
-    _stream_refs = {
-        # throughput drops with the core count — scale the reference
-        # floor DOWN by the same linear bound (measured by_cpus entries
-        # arrive with scale 1.0)
-        n: v / _s_scale
-        for n, v in (_s_sec or {}).items()
+    extras = {
+        name: round(_best_of(spark, qs[name], sf_dir, 2), 3)
+        for name in EXTRAS
     }
 
-    def _streaming_anoms(st: dict) -> list[str]:
-        # throughput scales INVERSELY with host load: anomalous when
-        # rows/s drops below quiet_ref / anomaly factor
-        return [
-            n for n in _STREAMS
-            if n in _stream_refs
-            and st[n + "_rows_per_s"] * _ANOMALY_FACTOR < _stream_refs[n]
-        ]
-
-    streaming_chosen, streaming_attempts = _run_guarded_section(
-        run_streaming,
-        # rows/s has no meaningful section "total"; the per-stream
-        # check is the signal, so total is recorded for telemetry only
-        lambda st: sum(st[n + "_rows_per_s"] for n in _STREAMS),
-        _streaming_anoms,
-    )
-    streaming = streaming_chosen["result"]
-
-    def run_extras() -> dict[str, float]:
-        ex: dict[str, float] = {}
-        for name in EXTRAS:
-            fn = qs[name]
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                best = min(best, time.time() - t0)
-            ex[name] = round(best, 3)
-            spark.catalog.clearCache()
-        return ex
-
-    _e_sec, _e_scale = _ref_section("extras")
-    _extras_refs = {n: v * _e_scale for n, v in (_e_sec or {}).items()}
-    _extras_ref_total = sum(
-        _extras_refs.get(n, 0.0) for n in EXTRAS if n in _extras_refs
-    )
-
-    def _extras_anoms(ex: dict) -> list[str]:
-        out = [
-            n for n, v in ex.items()
-            if n in _extras_refs
-            and v > _GATE_ANOMALY_FACTOR * _extras_refs[n]
-        ]
-        # section-total check over the gates that HAVE references (new
-        # gates without an entry can't inflate the reference total)
-        if _extras_ref_total > 0:
-            covered = sum(v for n, v in ex.items() if n in _extras_refs)
-            if covered > _ANOMALY_FACTOR * _extras_ref_total:
-                out.append("__section_total__")
-        return out
-
-    extras_chosen, extras_attempts = _run_guarded_section(
-        run_extras, lambda ex: sum(ex.values()), _extras_anoms,
-    )
-    extras = extras_chosen["result"]
-
-    # calibration sample adjacent to the extras/streaming block
-    # (VERDICT r10 #3): the headline pair brackets only the headline
-    # loop, but the host storms concentrate on the LONG extras (r10
-    # run 6: minhash 41 s), which is exactly where host-invariant
-    # ratios are most needed — so extras/streaming normalize against
-    # the quieter of (headline end, post-extras) samples.
-    calibration_shuffle_extras = extras_chosen["cal_end"]
-    calibration_io_extras = extras_chosen["io_end"]
-
-    total = round(sum(timings.values()), 3)
-
-    # Self-describing noise detection (VERDICT r9 #1): two-level flag —
-    # noisy_host = the CHOSEN attempt was never quiet (both bracketing
-    # sample PAIRS out of range — in EITHER lane, shuffle or IO — even
-    # after the bounded retry protocol above, i.e. the host never went
-    # quiet for ~15+ minutes; the recording is untrustworthy and says
-    # so); partially_noisy = contention at one end (some queries may be
-    # inflated; the cal-normalized ratios below still hold).
-    noisy_host = chosen_start_noisy and chosen_end_noisy
-    partially_noisy = chosen_start_noisy or chosen_end_noisy
-    cal_ref = max(min(calibration_shuffle, calibration_shuffle_end), 1e-9)
-    queries_per_cal = {
-        name: round(t / cal_ref, 2) for name, t in timings.items()
-    }
-    cal_ref_extras = max(
-        min(calibration_shuffle_end, calibration_shuffle_extras), 1e-9
-    )
-    extras_per_cal = {
-        name: round(t / cal_ref_extras, 2) for name, t in extras.items()
-    }
-    streaming_per_cal = {
-        # rows/s scales inversely with host speed, the calibration
-        # directly — the product is the host-invariant throughput twin
-        name: round(v * cal_ref_extras)
-        for name, v in streaming.items()
-        if name.endswith("_rows_per_s")
-    }
     print(
         json.dumps(
             {
                 "metric": "headline_queries_total",
-                "value": total,
+                "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "queries": timings,
                 "streaming": streaming,
                 "extras": extras,
-                "calibration_sec": calibration,
-                "calibration_shuffle_sec": calibration_shuffle,
-                "calibration_shuffle_end_sec": calibration_shuffle_end,
-                "calibration_shuffle_extras_sec": calibration_shuffle_extras,
-                "calibration_io_sec": chosen.get("io_start"),
-                "calibration_io_end_sec": chosen.get("io_end"),
-                "calibration_io_extras_sec": calibration_io_extras,
-                "noisy_host": noisy_host,
-                "partially_noisy": partially_noisy,
-                "queries_per_shuffle_cal": queries_per_cal,
-                "extras_per_shuffle_cal": extras_per_cal,
-                "streaming_rows_x_shuffle_cal": streaming_per_cal,
-                # per-section storm telemetry (VERDICT r12 #1/#7): the
-                # chosen attempt's unresolved anomalies (empty on a
-                # clean recording) plus full per-attempt history
-                "anomalous_gates": chosen["anomalous_gates"],
-                "extras_anomalous_gates": extras_chosen[
-                    "anomalous_gates"
-                ],
-                "streaming_anomalous_gates": streaming_chosen[
-                    "anomalous_gates"
-                ],
-                "attempts": attempts,
-                "extras_attempts": [
-                    {k: v for k, v in a.items() if k != "result"}
-                    for a in extras_attempts
-                ],
-                "streaming_attempts": [
-                    {k: v for k, v in a.items() if k != "result"}
-                    for a in streaming_attempts
-                ],
                 "sf": sf,
             }
         )

@@ -564,63 +564,62 @@ def _multimodal_ingest_fixture(spark, sf_dir, with_new_sigs=False):
     # (snap/md5 deterministic, oracle-pinned).
     from concurrent.futures import ThreadPoolExecutor
 
-    pool = ThreadPoolExecutor(max_workers=4)
-    f_cents = pool.submit(
-        kmeans_fit, arch_plan, 8, 2, "doc_id", "embedding"
-    )
-    # r13 (guide §2.4/§5): the archive relation feeds SIX consumers
-    # (three new-batch branches, fingerprints, signatures, k-means +
-    # membership + hashes) — in production it IS a persisted table;
-    # materialize its local analog once instead of re-running the
-    # docs⋈emb join per consumer. localCheckpoint blocks are
-    # ContextCleaner-released on GC; results identical (oracle-pinned).
-    arch = arch_plan.localCheckpoint(eager=True)
-    i = F.col("doc_id")
-    new_plan = (
-        arch.where(i % 5 == 0).select(
-            (i + 1000000).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" qq7")).alias("text"),
-            "embedding",
-            F.col("psig").bitwiseXOR(F.lit(5)).alias("psig"),
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        f_cents = pool.submit(
+            kmeans_fit, arch_plan, 8, 2, "doc_id", "embedding"
         )
-        .unionByName(
-            arch.where(i % 10 == 3).select(
-                (i + 2000000).alias("doc_id"), "text", "embedding", "psig"
-            )
-        )
-        .unionByName(
-            emb.where(
-                (F.col("vec_id") >= 300) & (F.col("vec_id") < 450)
-            ).select(
-                F.col("vec_id").alias("doc_id"),
-                F.concat(
-                    F.lit("fresh zz"), F.col("vec_id").cast("string"),
-                    F.lit("qx wholly new content row"),
-                ).alias("text"),
+        # r13 (guide §2.4/§5): the archive relation feeds SIX consumers
+        # (three new-batch branches, fingerprints, signatures, k-means +
+        # membership + hashes) — in production it IS a persisted table;
+        # materialize its local analog once instead of re-running the
+        # docs⋈emb join per consumer. localCheckpoint blocks are
+        # ContextCleaner-released on GC; results identical (oracle-pinned).
+        arch = arch_plan.localCheckpoint(eager=True)
+        i = F.col("doc_id")
+        new_plan = (
+            arch.where(i % 5 == 0).select(
+                (i + 1000000).alias("doc_id"),
+                F.concat(F.col("text"), F.lit(" qq7")).alias("text"),
                 "embedding",
-                _md5_to_long(
-                    F.concat(F.lit("f"), F.col("vec_id").cast("string"))
-                ).alias("psig"),
+                F.col("psig").bitwiseXOR(F.lit(5)).alias("psig"),
+            )
+            .unionByName(
+                arch.where(i % 10 == 3).select(
+                    (i + 2000000).alias("doc_id"), "text", "embedding", "psig"
+                )
+            )
+            .unionByName(
+                emb.where(
+                    (F.col("vec_id") >= 300) & (F.col("vec_id") < 450)
+                ).select(
+                    F.col("vec_id").alias("doc_id"),
+                    F.concat(
+                        F.lit("fresh zz"), F.col("vec_id").cast("string"),
+                        F.lit("qx wholly new content row"),
+                    ).alias("text"),
+                    "embedding",
+                    _md5_to_long(
+                        F.concat(F.lit("f"), F.col("vec_id").cast("string"))
+                    ).alias("psig"),
+                )
             )
         )
-    )
-    seen_fps = arch.select(
-        F.md5(
-            F.regexp_replace(
-                F.lower(F.trim(F.col("text"))), r"\s+", " "
-            )
-        ).alias("fingerprint")
-    )
-    # Overlap the INDEPENDENT materialization jobs (guide §2.6): the
-    # increment-batch checkpoint (five consumers), the batch signature
-    # table, and the persisted-signature-table checkpoint all depend
-    # only on the already-checkpointed archive — submitting them from
-    # the pool (which is already running the k-means fit started above,
-    # before the archive checkpoint) back-fills the executor gaps each
-    # serial action's tail would leave idle. Each branch computes
-    # exactly what it did serially; results and the zero-caching
-    # contract are unchanged.
-    try:
+        seen_fps = arch.select(
+            F.md5(
+                F.regexp_replace(
+                    F.lower(F.trim(F.col("text"))), r"\s+", " "
+                )
+            ).alias("fingerprint")
+        )
+        # Overlap the INDEPENDENT materialization jobs (guide §2.6): the
+        # increment-batch checkpoint (five consumers), the batch signature
+        # table, and the persisted-signature-table checkpoint all depend
+        # only on the already-checkpointed archive — submitting them from
+        # the pool (which is already running the k-means fit started above,
+        # before the archive checkpoint) back-fills the executor gaps each
+        # serial action's tail would leave idle. Each branch computes
+        # exactly what it did serially; results and the zero-caching
+        # contract are unchanged.
         f_new = pool.submit(lambda: new_plan.localCheckpoint(eager=True))
         # r14: the batch signature table builds from the batch PLAN
         # (arch is already checkpointed, so the 3-branch union is a
@@ -645,8 +644,6 @@ def _multimodal_ingest_fixture(spark, sf_dir, with_new_sigs=False):
         new_sigs = f_new_sigs.result() if f_new_sigs is not None else None
         seen_sigs = f_sigs.result()
         cents = f_cents.result()
-    finally:
-        pool.shutdown(wait=True)
     members = _tag_members(arch, cents, "doc_id", "embedding")
     seen_hashes = arch.select("doc_id", "psig")
     if with_new_sigs:

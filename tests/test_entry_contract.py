@@ -42,3 +42,15 @@ def test_all_queries_run_and_oracles_parse(spark):
             except Exception as exc:  # noqa: BLE001
                 failures.append(f"{name}: duckdb: {exc}")
     assert not failures, "\n".join(failures)
+
+
+def test_bench_gates_are_registered():
+    """Every gate bench.py times must exist in the registry (Spark-free:
+    no session is started)."""
+    import bench
+
+    qs = entrymod.queries()
+    timed = list(bench.HEADLINE) + list(bench.STREAMS) + list(bench.EXTRAS)
+    assert len(set(timed)) == len(timed), "gate timed twice"
+    missing = [name for name in timed if name not in qs]
+    assert not missing, missing

@@ -4,6 +4,10 @@ row-preserving stream==batch pin."""
 
 from __future__ import annotations
 
+import threading
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from openeo_processes_dask_spark.training.clustering import kmeans_fit
@@ -256,3 +260,44 @@ def test_stream_optional_lanes_match_batch(spark, tmp_path):
         stream_ingest_screen_multimodal(
             stream, fps, None, members, None, **kw
         )
+
+
+def test_gate_fixture_pool_shut_down_when_archive_checkpoint_raises(
+    spark, monkeypatch
+):
+    """The ingest_screen_multimodal gate fixture starts k-means on a pool
+    thread before it checkpoints the archive. When that checkpoint
+    raises, the pool must still be shut down: no worker thread may be
+    left running the fit."""
+    from openeo_processes_dask_spark.gates import training as gates
+    from openeo_processes_dask_spark.training import clustering
+
+    tables = {
+        "documents": spark.createDataFrame(
+            [(i, _T[i]) for i in range(4)], "doc_id long, text string"
+        ),
+        "embeddings": spark.createDataFrame(
+            [(i, _E[i]) for i in range(4)],
+            "vec_id long, embedding array<float>",
+        ),
+    }
+
+    def slow_fit(*_args, **_kwargs):
+        time.sleep(1.0)
+
+    def failing_checkpoint(self, eager=True):
+        raise RuntimeError("archive checkpoint failed")
+
+    before = set(threading.enumerate())
+    monkeypatch.setattr(gates, "_table", lambda _s, _d, name: tables[name])
+    monkeypatch.setattr(clustering, "kmeans_fit", slow_fit)
+    monkeypatch.setattr(
+        type(tables["documents"]), "localCheckpoint", failing_checkpoint
+    )
+    with pytest.raises(RuntimeError, match="archive checkpoint failed"):
+        gates._multimodal_ingest_fixture(spark, "unused")
+    leaked = [
+        t for t in threading.enumerate()
+        if t not in before and t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert not leaked, leaked

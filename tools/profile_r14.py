@@ -4,7 +4,7 @@ time it min-of-N with BOTH the bench's count() action and the noop sink
 ``.explain("formatted")`` to plans/r14/<name>_<tag>.txt.
 
 Usage:
-  PYTHONPATH=/root/repo python tools/profile_r13.py [--tag before] \
+  PYTHONPATH=. python tools/profile_r14.py [--tag before] \
       [--runs 3] [--no-plans] [query ...]
 
 Defaults to the bench HEADLINE + EXTRAS set. Prints one JSON line per
