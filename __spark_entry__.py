@@ -8,9 +8,10 @@ DuckDB-equivalent SQL for the driver's correctness gate.
 The query/oracle bodies live in ``openeo_processes_dask_spark/gates/``
 (one module per lane: core, training, parity, streaming, io_misc,
 extended); this file is a thin re-export.  Registry ordering — which
-decides what the driver's 50-slot correctness window sees — is set in
-``gates/__init__.py`` (never-driver-verified queries first; see the
-rotation policy documented there).
+decides what the driver's 50-slot correctness window sees — is computed
+in ``gates/__init__.py``: flagship, then the ``CHANGED`` gates, then the
+rest stalest-first by the ``CORRECTNESS_r*.json`` ledger (see the window
+order documented there).
 
 Oracle conventions (see gates/common.py and DIVERGENCES.md):
 - float aggregates rounded to 6 decimals on BOTH sides (engine sum-order

@@ -2,519 +2,103 @@
 
 Each lane module exports ``QUERIES`` (name -> (spark, sf_dir) -> DataFrame)
 and ``ORACLES`` (name -> DuckDB SQL).  :func:`all_queries` /
-:func:`all_oracles` merge the lanes and apply the driver-window rotation.
+:func:`all_oracles` merge the lanes in driver-window order.
 
-Rotation policy: the driver's correctness gate only runs the FIRST 50
-entries of ``queries()``, so the order rotates per round — flagship (slot
-1, always), then last round's reds (so the driver confirms their fixes),
-then this round's new queries, then least-recently-driver-verified, then
-the most-recently-green tail.  The union of CORRECTNESS_r01..r03 covers
-all pre-r4 queries; tools/check_oracle.py (a strict local replica of the
-driver compare, including signed-zero hashing) sweeps the full registry
-between rounds.
+Window order: the driver's correctness gate only runs the FIRST 50
+entries of ``queries()``, so the order is computed from the driver's own
+records rather than kept by hand.  ``flagship_daily_mean`` is slot 1,
+then the gates in :data:`CHANGED`, then every other gate stalest-first
+by :func:`ledger` (the last round with a green record in the repo-root
+``CORRECTNESS_r<N>.json`` files; a gate with no green record counts as
+round 0, so newly added gates lead without a hand edit).  Ties keep
+registry order: ``_LANES``, then each lane's dict order.  Without ledger
+files (the package used outside the checkout) every gate ties, so the
+order after the flagship and ``CHANGED`` is registry order.
+tools/check_oracle.py (a strict local replica of the driver compare,
+including signed-zero hashing) sweeps the full registry between rounds.
 """
 
 from __future__ import annotations
+
+import glob
+import json
+import os
+import re
 
 from . import core, extended, io_misc, parity, streaming, training
 
 _LANES = (core, training, parity, streaming, io_misc, extended)
 
-# The 47 gates no driver round had sampled before r7; driver-verified
-# green in r7 AND r8 (the r8 window was not rotated).
-_NEVER_CHECKED = [
-    # late-r6 batch (added after the r6 window closed)
-    "bpe_tokens", "image_near_dups", "bm25_index_search",
-    "streaming_attribution", "quantize_embeddings", "chunk_text",
-    "latest_crawl", "quantized_topk", "quality_selection",
-    "curation_pipeline", "rolling_anomaly", "audio_near_dups",
-    "video_near_dups", "streaming_anomaly", "count_min_words",
-    "hll_registers", "streaming_count_min", "bpe_encode_ids",
-    "tokenize_pack", "skew_join", "dedup_bloom",
-    # r6-continuation batch
-    "triangle_count", "corpus_diff", "json_extract", "jaccard_prefix",
-    "hybrid_rrf", "ema_smooth", "token_entropy", "classifier_auc",
-    "streaming_ema", "negative_samples", "range_bounds", "autocorr",
-    "harmonic", "minhash_incremental", "percentile_rank",
-    "standardize_embeddings", "scene_changes", "source_divergence",
-    "incremental_curation", "funnel", "retention", "top_paths",
-    "streaming_funnel", "leakage_split", "jsonl_roundtrip", "isotonic",
-]
+_FLAGSHIP = "flagship_daily_mean"
 
-# Driver-verified green in r6 (window slots 2-50 of the r6 rotation).
-_R6_GREEN: list[str] = [
-    "domain_stats",
-    "bm25_topk", "semdedup", "pagerank",
-    "time_partitioned_roundtrip", "stat_pruned_read",
-]
-
-# Driver-verified green in r6 (they were the r3-stale rotation set).
-_R3_NOW_R6 = [
-    "apply_neighborhood_2d",
-    "apply_neighborhood_2d_mean", "apply_neighborhood_mean", "array_ops",
-    "array_ops2", "crs_utm", "cummax", "cummin", "cumproduct", "ddmc",
-    "dedup_clusters", "dimension_labels", "ivf_topk", "load_stac_catalog",
-    "load_url_geojson", "mask_triangle", "merge_case4_subcube",
-    "merge_concat", "merge_disjoint_bands", "multimodal_av",
-    "multimodal_resize", "predict_curve_linear", "process_graph",
-    "rearrange", "reduce_quantiles", "rename_labels_dim",
-    "rename_labels_enumerated", "resample_bilinear",
-    "resample_cube_spatial_coarse", "resample_cube_spatial_near",
-    "resample_cubic", "resample_cubicspline", "resample_gauss",
-    "resample_lanczos", "resample_mode", "resample_rms",
-    "resample_spatial_grid", "rqa_trend", "salted_reduce",
-    "save_load_roundtrip", "streaming_dedup", "streaming_sliding_sum",
-    "text_ops",
-]
-
-# Most recent driver check = r5 (the r5 window minus its one red), in
-# r5-window order.
-_R5_GREEN = [
-    "load_stac_properties", "load_raster_nodata", "load_stac_resampled",
-    "pii_redact", "c4_clean", "bigram_nll",
-    "boilerplate_removal", "streaming_pii_redact",
-    "span_dedup_stats", "span_removal", "dsir_weights", "unicode_clean",
-    "corpus_stats", "interval_join", "streaming_cap",
-    "contamination_ratio", "vocabulary", "column_stats",
-    "compact_roundtrip", "manifest_timetravel", "streaming_sink",
-    "streaming_session_window", "streaming_upsert", "corpus_mix",
-    "aggregate_temporal_halves", "apply_kernel_grid", "fit_curve_linear",
-    "random_forest", "ngram_jaccard", "pq_topk", "training_pipeline",
-    "vector_buffer", "aggregate_week_median", "apply_dimension_center",
-    "cap_per_source", "dedup_incremental", "embedding_near_dups",
-    "gopher_filter", "kmeans_clusters", "language_id", "lsh_topk",
-    "pack_contiguous", "repetition_stats", "run_udf_plus1",
-    "sample_stratified", "split_assign", "token_count",
-    "apply_dimension_dropnull",
-]
-
-# Most recent driver check = r4 — the freshest tail.
-_R4_GREEN = [
-    "streaming_sessions", "resample_mercator", "vector_reproject",
-    "dedup_clusters_star", "segment_dedup", "decontaminate",
-    "streaming_dedup_static", "zorder_roundtrip", "tfidf_top_terms",
-    "random_projection", "load_raster_tiles", "logreg_quality",
-    "subsequence_topk", "multimodal_dedup", "multimodal_features",
-    "streaming_daily_sum", "reduce_any", "reduce_count_condition",
-    "filter_spatial", "mask_polygon", "apply_polygon", "trim_cube",
-    "order_argsort", "filter_temporal", "reduce_mean_over_time",
-    "aggregate_dekad", "merge_multiply", "mask_high_discount", "cumsum",
-    "interpolate_gaps", "dedup_exact", "minhash_near_dups",
-    "simhash_near_dups", "text_quality", "cosine_topk", "ndvi_events",
-    "apply_scale_clip", "resample_asof", "aggregate_spatial_zonal",
-    "filter_bands", "filter_bbox", "filter_labels_text",
-    "add_drop_dimension", "reduce_first", "reduce_product",
-    "reduce_variance", "reduce_spatial_sum", "sort_along_dim", "date_ops",
-]
-
-# Round-9 window: flagship + the 11 new r9 gates + the head of the
-# r4-stale tail. NOTE (fixed in r10, VERDICT r9 #3): the 11 new gates
-# displaced 9 entries of the r4 tail (_R4_GREEN[40:]) from the r9
-# window, so after r9 the oldest driver stratum was still r4, not r5 —
-# the r10 window below picks those 9 up first.
-_NEW_R9 = [
-    "load_stac_search", "weighted_sample", "cosine_topk_batch", "ann_recall",
-    "dedup_recall", "ivf_index_search", "temperature_mix",
-    "streaming_reservoir", "crs_laea", "rf_xgb_roundtrip", "crs_stereo",
-]
-_R4_TAIL_SLOTS = 50 - 1 - len(_NEW_R9)
-_WINDOW_R9 = (
-    ["flagship_daily_mean"]
-    + _NEW_R9
-    + _R4_GREEN[2:2 + _R4_TAIL_SLOTS]
-)
-assert len(_WINDOW_R9) == 50, len(_WINDOW_R9)
-
-# Gates NEW in r10 or whose implementation changed in r10, riding the
-# window so the driver verifies the new code paths: the as-of family
-# (asof_join batch + streaming, the bucketed nearest-label merge in
-# functions/asof.py replacing the resample crossJoin/BNLJ, the new
-# valid_within gate), URL canonicalization, the single-job merge label
-# probe, the AUC NaN guard, the xgb-interchange default_left/objective
-# fixes, and the dimension_labels bound.
-_CHANGED_R10 = [
-    "asof_join_events", "asof_join_nearest", "streaming_asof",
-    "url_canonical", "corpus_overlap", "fill_forward_gaps",
-    "fill_forward_bounded",
-    "resample_asof", "resample_asof_window", "resample_cube_spatial_near",
-    "resample_cube_spatial_coarse", "merge_multiply", "merge_concat",
-    "merge_disjoint_bands", "merge_case4_subcube", "classifier_auc",
-    "rf_xgb_roundtrip", "dimension_labels",
-]
-
-# Round-10 window (VERDICT r9 #4): flagship + the r10-changed gates +
-# the 9 r4-stale gates the r9 rotation displaced (_R4_GREEN[40:]) +
-# the head of the r5 stratum to exactly 50 slots. load_stac_resampled
-# (also on the changed asof path) rides inside _R5_GREEN[:3]. After
-# r10 the oldest driver stratum is genuinely r5's tail.
-_R5_HEAD_SLOTS = 50 - 1 - len(_CHANGED_R10) - len(_R4_GREEN[40:])
-_WINDOW_R10 = (
-    ["flagship_daily_mean"]
-    + _CHANGED_R10
-    + _R4_GREEN[40:]
-    + _R5_GREEN[:_R5_HEAD_SLOTS]
-)
-assert len(_WINDOW_R10) == 50, len(_WINDOW_R10)
-assert len(set(_WINDOW_R10)) == 50, "duplicate gate in window"
-
-# Gates NEW in r11 or whose implementation changed in r11, riding the
-# window so the driver verifies the new code paths: the quantile
-# sketch pair + the SemDeDup recall harness (new); url_canonical
-# (userinfo/IPv6 parsing), the asof_join family (NULL-on guard, empty
-# payload, dtype check in operators/interval.py; NULL-time guard in
-# streaming/events.py), semdedup (pair-stage refactor), and the
-# resample family (functions/asof.py percentile bucket range +
-# broadcast cutoff).
-_CHANGED_R11 = [
-    # quantile_sketch and quantile_sketch_grouped stay registry+sweep-
-    # verified but yield their window slots: the corresponding _merged
-    # gates call the builds twice and the estimates once, so the driver
-    # checks a STRICT superset of both code paths
-    "quantile_sketch_merged",
-    "quantile_sketch_grouped_merged", "source_token_profile",
-    "distinct_tokens_by_source", "count_min_by_source",
-    "streaming_quantile_sketch", "streaming_hll",
-    "semantic_dedup_recall", "semantic_dedup_planted",
-    "registered_domain_psl",
-    "url_canonical", "asof_join_nearest",
-    "streaming_asof", "resample_asof", "resample_asof_window",
-    "resample_cube_spatial_near",
-    # late r11: PPJoin verification rewrite (positional filter +
-    # array_intersect verify in training/dedup.py)
-    "jaccard_prefix",
-    # r11-continuation: ranking evaluation (NDCG/MRR/P/R — the eval leg
-    # of the retrieval lane), k-anonymity + l-diversity audit, and the
-    # ROLLUP corpus telemetry. Their three window slots come from
-    # r10-driver-fresh gates whose r11-changed code path stays covered
-    # by a window sibling: semdedup (its pair stage is driven by
-    # semantic_dedup_recall/planted; the refactor is additionally
-    # pinned by the composition unit test), and resample_cube_spatial_
-    # coarse + load_stac_resampled (the functions/asof.py bucket-range/
-    # broadcast change is driven by resample_asof, resample_asof_window,
-    # and resample_cube_spatial_near, which all stay). All three
-    # displaced gates remain registry+sweep-verified.
-    "ranking_metrics", "k_anonymity", "corpus_rollup",
-    # streaming_fill_forward (the stateful streaming twin of LOCF)
-    # takes asof_join_events' slot: the r11 interval.py hardening
-    # (NULL-on guard, validation) is shared code driven by
-    # asof_join_nearest, which stays; asof_join_events was
-    # driver-verified r10 and remains registry+sweep-verified.
-    "streaming_fill_forward",
-]
-
-# Round-11 window (VERDICT r10 #3): flagship + the r11-changed gates +
-# the WHOLE remaining r5 stratum tail (_R5_GREEN[22:], 26 gates — after
-# r11 no gate's freshest driver check is r5) + the two gates whose
-# last driver check genuinely predates r5 (_R4_GREEN[:2] — never in
-# the r9 window, which took [2:40], nor the r10 window, which took
-# [40:]) + the head of the r9-verified stratum to exactly 50.
-_WINDOW_R11 = (
-    ["flagship_daily_mean"]
-    + _CHANGED_R11
-    + _R5_GREEN[_R5_HEAD_SLOTS:]
-    + _R4_GREEN[:2]
-    + _R4_GREEN[2:2 + (50 - 1 - len(_CHANGED_R11)
-                       - len(_R5_GREEN[_R5_HEAD_SLOTS:]) - 2)]
-)
-assert len(_WINDOW_R11) == 50, len(_WINDOW_R11)
-assert len(set(_WINDOW_R11)) == 50, "duplicate gate in window"
-
-#: new-in-r11-continuation gates whose component code paths are both
-#: already driver-covered (bm25_eval = bm25_search, driver-verified
-#: r7/r8 via bm25_index_search, piped into ranking_metrics, which
-#: rides the r11 window) — they lead the r12 candidates instead of
-#: displacing a window slot.
-_NEW_R11_POST = [
-    "bm25_eval",
-    # classifier-eval completion: the reliability diagram, its ECE
-    # scalar, and the thresholded confusion report (companions of the
-    # window-riding classifier_auc and the r8-verified isotonic)
-    "classifier_calibration", "classifier_ece", "classifier_confusion",
-    # chance-corrected label agreement (annotator / model-vs-gold QA)
-    "cohens_kappa",
-    # group-fairness audit: per-group confusion + DP/EO gaps
-    "fairness_confusion", "fairness_gaps",
-]
-
-# ---- Round-12 rotation (VERDICT r11 #2/#8) ----
-# Derived from tools/freshness.py (computed per-gate last-driver-round
-# over CORRECTNESS_r01..r11), NOT from the hand-maintained strata
-# comments above — those have been wrong twice (r9: missed gates;
-# r11: candidate ordering freshness-inverted).  Ledger after r11:
-# 9 never-checked, 43 r6-stale, 45 r8, 46 r9, 43 r10, 50 r11.
-
-#: the 9 gates with NO green driver record through r11 (tools/
-#: freshness.py): the r11-continuation eval batch plus the two sketch
-#: builds whose _merged siblings rode the r11 window.
-_NEVER_AFTER_R11 = _NEW_R11_POST + [
-    "quantile_sketch", "quantile_sketch_grouped",
-]
-
-#: the 43 gates whose last green driver record is r6 (tools/
-#: freshness.py output order = registry order; _R6_GREEN plus the
-#: _R3_NOW_R6 members not re-verified by the r10/r11 merge/resample
-#: windows).
-_R6_STALE_AFTER_R11 = [
-    "domain_stats", "bm25_topk", "semdedup", "pagerank",
-    "time_partitioned_roundtrip", "stat_pruned_read",
-    "apply_neighborhood_2d", "apply_neighborhood_2d_mean",
-    "apply_neighborhood_mean", "array_ops", "array_ops2", "crs_utm",
-    "cummax", "cummin", "cumproduct", "ddmc", "dedup_clusters",
-    "ivf_topk", "load_stac_catalog", "load_url_geojson",
-    "mask_triangle", "multimodal_av", "multimodal_resize",
-    "predict_curve_linear", "process_graph", "rearrange",
-    "reduce_quantiles", "rename_labels_dim", "rename_labels_enumerated",
-    "resample_bilinear", "resample_cubic", "resample_cubicspline",
-    "resample_gauss", "resample_lanczos", "resample_mode",
-    "resample_rms", "resample_spatial_grid", "rqa_trend",
-    "salted_reduce", "save_load_roundtrip", "streaming_dedup",
-    "streaming_sliding_sum", "text_ops",
-]
-
-#: gates NEW in r12 or whose implementation (or oracle) changed in
-#: r12, riding the window so the driver verifies the new code paths.
-#: quantile_sketch / quantile_sketch_grouped (relational level-pick,
-#: VERDICT r11 #3) and bm25_eval (oracle frame fix, ADVICE r11 #4)
-#: already lead the window via _NEVER_AFTER_R11.
-_CHANGED_R12 = [
-    # NEW r12 (VERDICT r11 #5): vendored-PSL-snapshot eTLD+1 with
-    # wildcard/exception rules; registered_domain_psl shares the
-    # changed matching code and stays r11-fresh in the sweep
-    "registered_domain_psl_full",
-    # NEW r12 (VERDICT r11 #6): incremental SemDeDup — new batch vs
-    # persisted cluster membership, archive never rescanned
-    "semantic_dedup_incremental",
-    # ADVICE r11 #1: unconditional late-row guard in stream_fill_forward
-    "streaming_fill_forward",
-    # ADVICE r11 #3: k_anonymize redaction dtype validation
-    "k_anonymity",
-    # ADVICE r11 #4 (oracle frame) + r12 finalize-projection refactor
-    # shared with the new streaming twin
-    "ranking_metrics",
-    # NEW r12 (VERDICT r11 #7): online ranking eval — stateful
-    # accumulation + shared finalize, final emission == batch row
-    "streaming_ranking_metrics",
-    # NEW r12: SimHash ingest screen — completes the incremental
-    # matrix (exact / MinHash / semantic / Hamming)
-    "simhash_incremental",
-    # NEW r12: stateless streaming SemDeDup ingest screen (semi/anti
-    # stream-static joins; drained verdicts == batch incremental)
-    "streaming_semdedup_incremental",
-    # NEW r12: generic perceptual-hash ingest screen (image dHash)
-    "image_near_dups_incremental",
-    # NEW r12: composed per-increment ingest verdict (exact fingerprint
-    # + MinHash screens against persisted archive tables, one relation)
-    "ingest_screen",
-    # NEW r12: stateless streaming MinHash screen (per-row HOF
-    # signatures; drained-distinct == batch minhash_incremental)
-    "streaming_minhash_screen",
-    # NEW r12: audio-landmark ingest screen (generic set-overlap)
-    "audio_near_dups_incremental",
-]
-
-# Window: flagship + never-checked (lead) + r12-changed + the stalest
-# fill from the r6 stratum.  The r6 tail that misses the window heads
-# the candidates, then strata in computed-freshness order.
-_R6_FILL = 50 - 1 - len(_NEVER_AFTER_R11) - len(_CHANGED_R12)
-_WINDOW_R12 = (
-    ["flagship_daily_mean"]
-    + _NEVER_AFTER_R11
-    + _CHANGED_R12
-    + _R6_STALE_AFTER_R11[:_R6_FILL]
-)
-assert len(_WINDOW_R12) == 50, len(_WINDOW_R12)
-assert len(set(_WINDOW_R12)) == 50, "duplicate gate in window"
-
-# ---- r13 rotation (VERDICT r12 #2) ----
-# Derived from tools/freshness.py over CORRECTNESS_r01..r12 (computed,
-# not hand-maintained). Ledger after r12: 0 never-checked, 15 r6-stale,
-# 45 r8, 46 r9, 43 r10, 46 r11, 50 r12.
-
-#: the 15 gates whose last green driver record is r6 (tools/
-#: freshness.py output order = registry order) — the whole stratum
-#: rides the r13 window, retiring r6 as the oldest stratum.
-_R6_STALE_AFTER_R12 = [
-    "rename_labels_enumerated", "resample_bilinear", "resample_cubic",
-    "resample_cubicspline", "resample_gauss", "resample_lanczos",
-    "resample_mode", "resample_rms", "resample_spatial_grid",
-    "rqa_trend", "salted_reduce", "save_load_roundtrip",
-    "streaming_dedup", "streaming_sliding_sum", "text_ops",
-]
-
-#: the 45 gates whose last green driver record is r8 (freshness order
-#: = registry order); the head fills the r13 window, the tail heads
-#: the r14 candidates.
-_R8_STALE_AFTER_R12 = [
-    "bpe_tokens", "image_near_dups", "bm25_index_search",
-    "streaming_attribution", "quantize_embeddings", "chunk_text",
-    "latest_crawl", "quantized_topk", "quality_selection",
-    "curation_pipeline", "rolling_anomaly", "audio_near_dups",
-    "video_near_dups", "streaming_anomaly", "count_min_words",
-    "hll_registers", "streaming_count_min", "bpe_encode_ids",
-    "tokenize_pack", "skew_join", "dedup_bloom", "triangle_count",
-    "corpus_diff", "json_extract", "hybrid_rrf", "ema_smooth",
-    "token_entropy", "streaming_ema", "negative_samples",
-    "range_bounds", "autocorr", "harmonic", "minhash_incremental",
-    "percentile_rank", "standardize_embeddings", "scene_changes",
-    "source_divergence", "incremental_curation", "funnel", "retention",
-    "top_paths", "streaming_funnel", "leakage_split", "jsonl_roundtrip",
-    "isotonic",
-]
-
-#: gates NEW in r13 or whose implementation changed in r13, riding the
-#: window so the driver verifies the new code paths.
-_CHANGED_R13 = [
-    # NEW r13 (VERDICT r12 #4): composed multi-modality ingest verdict
-    # (exact + MinHash + semantic + perceptual, persisted archive
-    # tables, one relation per increment)
+#: Gates whose code path changed since the newest CORRECTNESS round; they
+#: follow the flagship so the next driver round re-verifies them.  Add a
+#: gate here when you change its code; drop it once a round verifies it.
+CHANGED = [
+    # both call _multimodal_ingest_fixture, whose pool became a `with`
+    # block after round 14
     "ingest_screen_multimodal",
-    # NEW r13: its row-preserving stateless streaming twin
     "streaming_ingest_screen_multimodal",
-    # NEW r13: the composed text screen through the PERSISTED
-    # pre-banded archive table (probe 22 asymptote; same oracle)
-    "ingest_screen_prebanded",
-    # CHANGED r13: a regenerated stream fixture now invalidates the
-    # durable sink+checkpoint pair (the r13 sweep caught the stale
-    # checkpoint double-appending after the new staleness guard first
-    # wiped a markerless source)
-    "streaming_sink",
-    # NEW r13: t-closeness — the third leg of the privacy audit trio
-    # (exact-integer total-variation distance per equivalence class)
-    "t_closeness",
-    # NEW r13-continuation: class-level l-diversity (distinct-l + exact
-    # recursive (c,l) over the sorted frequency profile)
-    "l_diversity",
-    # NEW r13-continuation: winnowing fingerprints (Schleimer et al.
-    # 2003 / MOSS) — zero-shuffle nested-HOF selection + overlap pairs
-    "winnow_fingerprints",
-    "winnow_overlap",
-    # NEW r13-continuation: stateless streaming decontamination screen
-    # (per-row HOF digests + stream-static broadcast join)
-    "streaming_contamination_screen",
-    # NEW r13-continuation: winnowing's new-x-seen ingest lane and the
-    # per-pair decontamination attribution (both named compositions
-    # through the generic shared_key_incremental engine)
-    "winnow_incremental",
-    "contamination_attribution",
-    # NEW r13-continuation: stateless streaming winnow screen (per-row
-    # HOF selection + fingerprint-keyed stream-static join)
-    "streaming_winnow_screen",
-    # NEW r13-continuation: C4-policy corpus-global line dedup
-    # (keep-first, blank lines survive, ordered rebuild)
-    "dedup_lines_global",
-    # NEW r13-continuation: CCNet head/middle/tail quality bucketing
-    # (deterministic per-group ntile over the tie-broken total order)
-    "quality_buckets",
-    # NEW r13-continuation: exact Levenshtein verification of screen
-    # candidates + markup stripping (crawl-extraction stage)
-    "levenshtein_verify",
-    "strip_markup",
-    # NEW r13-continuation: contamination localization + surgical
-    # span excision (the decontamination story's last two stages)
-    "decontaminate_spans",
-    "remove_contaminated_spans",
-    # NEW r13-continuation: exact data-recipe planning (targets /
-    # epochs / per-epoch retention per domain)
-    "mixture_plan",
-    # ADVICE r12 #1: PSL parser punycode-encodes IDN rules + depth
-    # default raised — shared matching code changed
-    "registered_domain_psl_full",
-    # ADVICE r12 #2: streaming replay now rounds through the decimal
-    # shortest-repr HALF_UP path (exact JVM F.round twin)
-    "streaming_ranking_metrics",
 ]
 
-_R8_FILL = 50 - 1 - len(_CHANGED_R13) - len(_R6_STALE_AFTER_R12)
-_WINDOW_R13 = (
-    ["flagship_daily_mean"]
-    + _CHANGED_R13
-    + _R6_STALE_AFTER_R12
-    + _R8_STALE_AFTER_R12[:_R8_FILL]
+_REPO = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
-assert len(_WINDOW_R13) == 50, len(_WINDOW_R13)
-assert len(set(_WINDOW_R13)) == 50, "duplicate gate in window"
 
-# ---- r14 rotation (VERDICT r13 #8) ----
-# Derived from tools/freshness.py over CORRECTNESS_r01..r13 (computed,
-# not hand-maintained). Ledger after r13: 0 never-checked, 32 r8-stale,
-# 46 r9, 42 r10, 46 r11, 47 r12, 50 r13.
 
-#: the 32 gates whose last green driver record is r8 (freshness order).
-_R8_STALE_AFTER_R13 = [
-    "streaming_anomaly", "count_min_words", "hll_registers",
-    "streaming_count_min", "bpe_encode_ids", "tokenize_pack",
-    "skew_join", "dedup_bloom", "triangle_count", "corpus_diff",
-    "json_extract", "hybrid_rrf", "ema_smooth", "token_entropy",
-    "streaming_ema", "negative_samples", "range_bounds", "autocorr",
-    "harmonic", "minhash_incremental", "percentile_rank",
-    "standardize_embeddings", "scene_changes", "source_divergence",
-    "incremental_curation", "funnel", "retention", "top_paths",
-    "streaming_funnel", "leakage_split", "jsonl_roundtrip", "isotonic",
-]
+def _green(rec: dict) -> bool:
+    """A record refreshes its gate only if it ran without error and every
+    compared facet matched (rows-only records carry null schema/hash)."""
+    return (
+        not rec.get("err")
+        and bool(rec.get("rows_match"))
+        and rec.get("schema_match") is not False
+        and rec.get("hash_match") is not False
+    )
 
-#: the head of the r9 stratum (freshness order) — fills the window.
-_R9_STALE_AFTER_R13 = [
-    "load_stac_search", "weighted_sample", "cosine_topk_batch",
-    "ann_recall", "dedup_recall", "ivf_index_search",
-]
 
-#: gates whose IMPLEMENTATION changed in the r14 optimization round
-#: (structural changes: lazy checkpoint path, fixture overlap pools,
-#: bm25 spread, expression-memo swaps on their hot paths) — ride the
-#: window so the driver verifies the new code paths. The remaining
-#: memo-touched gates (quantile_sketch_merged/_grouped,
-#: semantic_dedup_planted/_recall, corpus_rollup, ivf_topk,
-#: multimodal_dedup, image_near_dups_incremental, audio/video_near_dups)
-#: share the identical memoized expressions pinned bit-equal by
-#: tests/test_r14_memo_pins.py + tests/test_r13_expr_memo.py and were
-#: oracle-verified in-round; they queue behind the staleness strata.
-#: hybrid_rrf and minhash_incremental double as r8-stale retirements
-#: (listed once, in the changed block).
-_CHANGED_R14 = [
-    "minhash_incremental", "ingest_screen", "ingest_screen_multimodal",
-    "streaming_ingest_screen_multimodal", "hybrid_rrf", "bm25_topk",
-    "bm25_eval", "semantic_dedup_incremental",
-    "streaming_semdedup_incremental", "quantile_sketch",
-    "simhash_near_dups", "simhash_incremental", "image_near_dups",
-    "semdedup", "kmeans_clusters",
-]
-
-_R8_REMAINING_R14 = [
-    g for g in _R8_STALE_AFTER_R13 if g not in _CHANGED_R14
-]
-_R9_FILL = 50 - 1 - len(_CHANGED_R14) - len(_R8_REMAINING_R14)
-_WINDOW_R14 = (
-    ["flagship_daily_mean"]
-    + _CHANGED_R14
-    + _R8_REMAINING_R14
-    + _R9_STALE_AFTER_R13[:_R9_FILL]
-)
-assert len(_WINDOW_R14) == 50, len(_WINDOW_R14)
-assert len(set(_WINDOW_R14)) == 50, "duplicate gate in window"
-
-_PRIORITY = (
-    _WINDOW_R14
-    # r15 candidates, stalest-first per tools/freshness.py: the r9
-    # stratum tail, then r10 / r11 / r12 / r13 strata (each internally
-    # in prior-priority order)
-    + _R9_STALE_AFTER_R13[_R9_FILL:]
-    + _NEW_R9                 # r9 stratum (stale tail, registry order)
-    + _R4_GREEN[2:40]
-    + _R4_GREEN[40:]
-    + _CHANGED_R10
-    + _WINDOW_R11
-    + _WINDOW_R12
-    + _WINDOW_R13             # driver-verified r13
-)
+def ledger(directory: str | None = None) -> dict[str, int]:
+    """Gate name -> last round with a green record in the
+    ``CORRECTNESS_r<N>.json`` files of ``directory`` (default: the repo
+    root); gates never green are absent.  A file that does not parse as
+    ``{gate: record}`` raises ValueError naming it, so a bad file cannot
+    silently drop a round."""
+    last: dict[str, int] = {}
+    pattern = os.path.join(directory or _REPO, "CORRECTNESS_r*.json")
+    for path in glob.glob(pattern):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
+            continue
+        try:
+            with open(path) as fh:
+                records = json.load(fh)
+        except ValueError as exc:
+            raise ValueError(
+                f"malformed correctness ledger {path}: {exc}"
+            ) from exc
+        if not isinstance(records, dict) or not all(
+            isinstance(r, dict) for r in records.values()
+        ):
+            raise ValueError(
+                f"malformed correctness ledger {path}: not {{gate: record}}"
+            )
+        for gate, rec in records.items():
+            if _green(rec):
+                last[gate] = max(last.get(gate, 0), int(m.group(1)))
+    return last
 
 
 def _merged(attr: str) -> dict:
     base: dict = {}
     for lane in _LANES:
         base.update(getattr(lane, attr))
-    ordered = {k: base[k] for k in _PRIORITY if k in base}
-    ordered.update((k, v) for k, v in base.items() if k not in ordered)
-    return ordered
+    last = ledger()
+    head = [k for k in [_FLAGSHIP, *CHANGED] if k in base]
+    # sorted() is stable, so gates of one round keep registry order
+    rest = sorted(
+        (k for k in base if k not in head), key=lambda k: last.get(k, 0)
+    )
+    return {k: base[k] for k in head + rest}
 
 
 def all_queries() -> dict:
@@ -535,8 +119,6 @@ def all_oracles() -> dict:
     dir): builders read ORACLE_SF_DIR at call time, so a process that
     switches fixture directories must not get SQL replayed from the old
     one."""
-    import os
-
     sf = os.environ.get("ORACLE_SF_DIR")
     out = {}
     for k, v in _merged("ORACLES").items():

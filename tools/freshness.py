@@ -1,101 +1,42 @@
-"""Per-gate driver-verification freshness ledger (VERDICT r11 #8).
+"""Per-gate driver-verification freshness listing.
 
-Recomputes, from the CORRECTNESS_r*.json artifacts the driver writes
-each round, the last round in which the driver itself verified every
-gate currently registered in ``__spark_entry__.queries()`` — and prints
-the stalest N.  The hand-maintained strata comments in
-``gates/__init__.py`` have been wrong twice (r9: stale list missed
-gates, fixed r10; r11: candidate ordering freshness-inverted, caught by
-the judge), so every future window rotation derives from THIS output
-instead of from the comments.
+Prints, for every gate registered in ``__spark_entry__.queries()``, the
+last round in which the driver itself verified it green, stalest first.
+The ledger and the green rule live in ``openeo_processes_dask_spark.gates``
+(:func:`~openeo_processes_dask_spark.gates.ledger`), which also derives the
+driver-window order from them; this tool only lists the ledger.
 
 Usage::
 
     python tools/freshness.py [N]          # stalest N (default 60)
     python tools/freshness.py --all        # full ledger, stalest first
-
-A gate only counts as driver-verified in a round if its record in that
-round's file is fully green (rows+schema+hash for strict gates; rows
-for rows-only gates) — an errored or mismatched record does not refresh
-it.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
+from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _green(rec: dict) -> bool:
-    if rec.get("err"):
-        return False
-    if not rec.get("rows_match"):
-        return False
-    # strict gates carry schema/hash; rows-only records omit or null them
-    for k in ("schema_match", "hash_match"):
-        if k in rec and rec[k] is False:
-            return False
-    return True
-
-
-def compute_freshness() -> dict[str, int]:
-    """gate name -> last driver round with a green record (0 = never)."""
+def main() -> None:
     sys.path.insert(0, REPO)
     import __spark_entry__ as e
+    from openeo_processes_dask_spark.gates import ledger
 
-    gates = list(e.queries())
-    last: dict[str, int] = {g: 0 for g in gates}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            data = json.load(open(path))
-        except Exception:
-            continue
-        for g, rec in data.items():
-            if g in last and isinstance(rec, dict) and _green(rec):
-                last[g] = max(last[g], rnd)
-    return last
-
-
-def suggest_window(last: dict[str, int], size: int = 50) -> list[str]:
-    """Mechanical next-round window: flagship first, then the stalest
-    gates (never-checked lead). The round builder still PREPENDS the
-    round's new/changed gates by hand — freshness cannot know what
-    changed — but the fill order comes from here, never from comments."""
-    order = [g for g in sorted(last, key=lambda g: last[g])
-             if g != "flagship_daily_mean"]
-    return ["flagship_daily_mean"] + order[: size - 1]
-
-
-def main() -> None:
     n = 60
-    show_all = "--all" in sys.argv
     for a in sys.argv[1:]:
         if a.isdigit():
             n = int(a)
-    if "--window" in sys.argv:
-        last = compute_freshness()
-        for g in suggest_window(last):
-            print(g)
-        return
-    last = compute_freshness()
-    # stalest first; never-checked (0) lead.  Ties keep registry order,
-    # which is itself deterministic, so rotations are reproducible.
+    green = ledger()
+    last = {g: green.get(g, 0) for g in e.queries()}
     order = sorted(last, key=lambda g: last[g])
-    rows = order if show_all else order[:n]
+    rows = order if "--all" in sys.argv else order[:n]
     for g in rows:
         rnd = last[g]
         print(f"{'never' if rnd == 0 else f'r{rnd:02d}':>6}  {g}")
-    from collections import Counter
-
     hist = Counter(last.values())
     summary = ", ".join(
         f"{'never' if r == 0 else f'r{r}'}: {c}"
