@@ -172,3 +172,27 @@ class DataCube:
 
     def __repr__(self) -> str:  # pragma: no cover
         return f"DataCube(dims={self.meta.dims}, value={self.meta.value_col!r})"
+
+
+def same_dim_rows(a: DataFrame, b: DataFrame, dims) -> bool:
+    """True when Catalyst proves ``a`` and ``b`` yield the same rows over
+    ``dims`` — so every one of those dims has the same labels on both
+    sides — from the plans alone, without a Spark job.
+
+    xarray compares coordinates it holds in memory; in long format the
+    labels are data, but two cubes cut from one source by the same label
+    predicates share their lineage. The optimized plans of the two
+    projections onto ``dims`` (column pruning drops every value column)
+    are compared with ``sameResult``, whose canonical form ignores
+    expression ids and the order of conjunctive filters. A plan holding a
+    nondeterministic expression (``rand()``) is never proven: two
+    evaluations may differ. False means "not proven", not "different" —
+    callers fall back to a label probe."""
+    # selectExpr of quoted names: about half the py4j calls of select(),
+    # which matters as the check runs on every merge; quoting keeps a
+    # name from being parsed as an expression
+    cols = ["`" + d.replace("`", "``") + "`" for d in dims]
+    pa, pb = (
+        df.selectExpr(*cols)._jdf.queryExecution().optimizedPlan() for df in (a, b)
+    )
+    return pa.sameResult(pb) and pa.deterministic() and pb.deterministic()

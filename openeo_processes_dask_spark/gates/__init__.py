@@ -39,6 +39,10 @@ CHANGED = [
     # block after round 14
     "ingest_screen_multimodal",
     "streaming_ingest_screen_multimodal",
+    # merge_cubes decides equal labels from plan equivalence; these two
+    # no longer pass a caller hint that skipped the label probe
+    "merge_multiply",
+    "merge_concat",
 ]
 
 _REPO = os.path.dirname(

@@ -198,9 +198,68 @@ def q_merge_multiply(spark, sf_dir):
     cells = _li_cells(spark, sf_dir)
     c1 = DataCube(cells.select("x", "pos", F.col("sep").alias("value")), dims=("x", "pos"))
     c2 = DataCube(cells.select("x", "pos", F.col("sd").alias("value")), dims=("x", "pos"))
-    # label_relation hint: both cubes project the same cells table, so
-    # skip the 4 label-set probing jobs the auto-detection would run
-    out = merge_cubes(c1, c2, overlap_resolver="multiply", label_relation="equal")
+    out = merge_cubes(c1, c2, overlap_resolver="multiply")
+    return _round6(out.df, "value")
+
+
+def _x_extent_filter(cube: str) -> dict:
+    """filter_labels node keeping ``100 <= x < 900`` of parameter ``cube``."""
+    x = {"from_parameter": "x"}
+    return {
+        "process_id": "filter_labels",
+        "arguments": {
+            "data": {"from_parameter": cube},
+            "dimension": "x",
+            "condition": {
+                "process_graph": {
+                    "lo": {"process_id": "gte", "arguments": {"x": x, "y": 100}},
+                    "hi": {"process_id": "lt", "arguments": {"x": x, "y": 900}},
+                    "r": {
+                        "process_id": "and",
+                        "arguments": {"x": {"from_node": "lo"}, "y": {"from_node": "hi"}},
+                        "result": True,
+                    },
+                }
+            },
+        },
+    }
+
+
+def q_merge_graph_filtered(spark, sf_dir):
+    """merge_cubes as a process graph sees it: no caller hint. Two value
+    cubes of the lineitem cells, each cut by the same filter_labels extent,
+    merged with a binary resolver through plans.execute_process_graph —
+    plan equivalence decides case 2 without a label-probe job."""
+    _setup(spark)
+    from openeo_processes_dask_spark.cube import DataCube
+    from openeo_processes_dask_spark.plans import execute_process_graph
+
+    cells = _li_cells(spark, sf_dir)
+    named = {
+        c: DataCube(cells.select("x", "pos", F.col(c).alias("value")), dims=("x", "pos"))
+        for c in ("sep", "sd")
+    }
+    xy = {"x": {"from_parameter": "x"}, "y": {"from_parameter": "y"}}
+    pg = {
+        "process_graph": {
+            "p": _x_extent_filter("sep"),
+            "d": _x_extent_filter("sd"),
+            "mc": {
+                "process_id": "merge_cubes",
+                "arguments": {
+                    "cube1": {"from_node": "p"},
+                    "cube2": {"from_node": "d"},
+                    "overlap_resolver": {
+                        "process_graph": {
+                            "r": {"process_id": "subtract", "arguments": xy, "result": True}
+                        }
+                    },
+                },
+                "result": True,
+            },
+        }
+    }
+    out = execute_process_graph(pg, named)
     return _round6(out.df, "value")
 
 
@@ -323,6 +382,7 @@ QUERIES = {
     "aggregate_dekad": q_aggregate_dekad,
     "aggregate_week_median": q_aggregate_week_median,
     "merge_multiply": q_merge_multiply,
+    "merge_graph_filtered": q_merge_graph_filtered,
     "mask_high_discount": q_mask_high_discount,
     "apply_scale_clip": q_apply_scale_clip,
     "cumsum": q_cumsum,
@@ -405,6 +465,11 @@ ORACLES = {
     "merge_multiply": f"""
             WITH {_CELLS_CTE}
             SELECT x, pos, round(sep * sd, 6) AS value FROM cells
+        """,
+    "merge_graph_filtered": f"""
+            WITH {_CELLS_CTE}
+            SELECT x, pos, round(sep - sd, 6) AS value FROM cells
+            WHERE x >= 100 AND x < 900
         """,
     "mask_high_discount": f"""
             WITH {_CELLS_CTE}

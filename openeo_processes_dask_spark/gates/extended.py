@@ -358,7 +358,7 @@ def q_merge_concat(spark, sf_dir):
 
     g = _grid_cube(spark, sf_dir)
     doubled = g.with_df(g.df.withColumn("value", F.col("value") * 2))
-    out = merge_cubes(g, doubled, label_relation="equal")
+    out = merge_cubes(g, doubled)
     out = inspect(out, message="merge_concat gate")
     return _round6(out.df.select("x", "y", "band", "cubes", "value"), "value")
 

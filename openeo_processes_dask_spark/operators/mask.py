@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from openeo_processes_dask_spark.core import process
-from openeo_processes_dask_spark.cube import DataCube
+from openeo_processes_dask_spark.cube import DataCube, same_dim_rows
 
 
 def _extract_rings(geometries) -> list[np.ndarray]:
@@ -118,13 +118,17 @@ def mask(data: DataCube, mask: DataCube, replacement=None) -> DataCube:  # noqa:
     shared = [d for d in data.meta.dims if d in set(mask.meta.dims)]
     # Shared TEMPORAL dims must agree label-for-label (reference:
     # cubes/mask.py:40-55) — a silent partial join would unmask those
-    # rows. The check is fully distributed (VERDICT r7 #3): a full-outer
-    # join of the two DISTINCT label relations reduced to one 3-number
-    # aggregate row — label values never reach the driver, so an
+    # rows. A mask derived from the data cube (e.g. apply(data, gt)) is
+    # proven to agree from the plans alone (same_dim_rows), with no job.
+    # Otherwise the check is fully distributed (VERDICT r7 #3): a
+    # full-outer join of the two DISTINCT label relations reduced to one
+    # 3-number aggregate row — label values never reach the driver, so an
     # event-grade temporal dimension (1e9 timestamps) costs one shuffle
     # of 8-byte labels instead of a driver OOM.
     for d in shared:
-        if data.meta.role_of(d) == "temporal":
+        if data.meta.role_of(d) == "temporal" and not same_dim_rows(
+            data.df, mask.df, [d]
+        ):
             dl = (
                 data.df.select(F.col(d).alias("__la__"))
                 .distinct()

@@ -9,6 +9,13 @@ joins on the shared dims only — AQE broadcasts the lower-dim side when its
 runtime size is under the broadcast threshold (exactly the reference's
 xarray broadcast, merge.py:245-291, without the memory blow-up) and
 degrades to a shuffled join when the "lower-dim" cube is itself huge.
+
+Choosing the case needs the per-dim label relationship, which xarray reads
+off in-memory coordinates (merge.py:91-293). Here it is first decided from
+lineage: when Catalyst proves both cubes yield the same dim rows
+(``cube.same_dim_rows`` — e.g. two value cubes cut from one source by the
+same filter_labels), every dim has equal labels and case 1/2 follows with
+no Spark job. Only when that cannot be proven does ``_label_probe`` run.
 """
 
 from __future__ import annotations
@@ -19,7 +26,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from openeo_processes_dask_spark.core import REGISTRY, process
-from openeo_processes_dask_spark.cube import DataCube
+from openeo_processes_dask_spark.cube import DataCube, same_dim_rows
 
 
 from openeo_processes_dask_spark.exceptions import (  # noqa: F401
@@ -40,6 +47,10 @@ def _resolve_binary(resolver: Union[str, Callable, None]) -> Optional[Callable]:
 def _label_probe(cube1: DataCube, cube2: DataCube, dims) -> dict[str, tuple]:
     """Per-dim label-set relationship WITHOUT collecting labels:
     ``{dim: (differs, overlaps)}``.
+
+    The fallback behind plan equivalence: merge_cubes runs it only when
+    ``same_dim_rows`` cannot prove the two cubes' dim rows equal (different
+    filters, different sources, nondeterministic plans).
 
     merge_cubes only ever needs these two BOOLEANS — which dims have
     differing label sets, and whether the one differing dim shares any
@@ -102,20 +113,17 @@ def merge_cubes(
     cube2: DataCube,
     overlap_resolver: Union[str, Callable, None] = None,
     context=None,
-    label_relation: Union[str, None] = None,
 ) -> DataCube:
-    """``label_relation`` is a performance hint skipping the label-set
-    probing actions when the caller already knows the relationship
-    (xarray holds coords eagerly; long format must scan to learn it —
-    one distributed count-probe job per shared dim, labels never reach
-    the driver): ``"equal"`` = same labels on every dim (cases 1/2).
-    """
+    """Merge two cubes (reference: cubes/merge.py:54-295). With the same
+    dims, provably equal dim rows go to case 1/2 with no Spark job;
+    otherwise one distributed count-probe job, which never collects
+    labels, picks case 1, 2 or 3."""
     resolver = _resolve_binary(overlap_resolver)
     dims1, dims2 = set(cube1.meta.dims), set(cube2.meta.dims)
     v = cube1.value_col
 
     if dims1 == dims2:
-        if label_relation == "equal":
+        if same_dim_rows(cube1.df, cube2.df, cube1.meta.dims):
             differing: list = []
             probes: dict = {}
         else:

@@ -287,8 +287,13 @@ def test_oracle_bpe_words_matches_engine_pretokenize():
 # ------------------------------------------------------- mask branches
 
 
-def _cube(spark, t_vals, tag):
+def _cube(spark, t_vals, tag, reverse=False):
+    """``reverse=True`` gives the same rows in the opposite order: equal
+    labels that the plans cannot prove equal, so merge_cubes falls back
+    to its label probe."""
     rows = [(t, float(i), 1.0) for i, t in enumerate(t_vals)]
+    if reverse:
+        rows.reverse()
     df = spark.createDataFrame(rows, "t int, x double, value double")
     return DataCube(df, dims=("t", "x"), value_col="value")
 
@@ -330,19 +335,18 @@ def test_mask_null_temporal_label_on_both_sides_ok(spark):
 # ------------------------------------------------------- merge probes
 
 
-def test_merge_equal_hint_skips_label_probe(spark, monkeypatch):
-    """label_relation='equal' must run ZERO label-probe jobs."""
+def test_merge_same_lineage_skips_label_probe(spark, monkeypatch):
+    """Two cubes from one source, no caller hint: plan equivalence proves
+    their labels equal, so merge_cubes runs ZERO label-probe jobs."""
     from openeo_processes_dask_spark.operators import merge as merge_mod
 
     def _boom(*a, **kw):
-        raise AssertionError("label probe ran despite label_relation=equal")
+        raise AssertionError("label probe ran for cubes of one lineage")
 
     monkeypatch.setattr(merge_mod, "_label_probe", _boom)
     c1 = _cube(spark, [1, 2], "a")
-    c2 = _cube(spark, [1, 2], "b")
-    out = merge_mod.merge_cubes(
-        c1, c2, overlap_resolver="add", label_relation="equal"
-    )
+    c2 = c1.with_df(c1.df.withColumn("value", F.col("value") * 2))
+    out = merge_mod.merge_cubes(c1, c2, overlap_resolver="add")
     # case 2: elementwise inner join on all dims — both cubes have rows
     # (t=1, x=0.0) and (t=2, x=1.0)
     assert out.df.count() == 2
@@ -363,7 +367,7 @@ def test_merge_probe_never_collects_labels_and_runs_one_job(
     DataFrame = concrete_dataframe_cls()
 
     c1 = _cube(spark, [1, 2, 3], "a")
-    c2 = _cube(spark, [1, 2, 3], "b")
+    c2 = _cube(spark, [1, 2, 3], "b", reverse=True)
     c1.df.cache().count()
     c2.df.cache().count()
 
@@ -397,7 +401,7 @@ def test_merge_null_labels_on_both_sides_not_differing(spark):
     from openeo_processes_dask_spark.operators.merge import merge_cubes
 
     c1 = _cube(spark, [1, None], "a")
-    c2 = _cube(spark, [1, None], "b")
+    c2 = _cube(spark, [1, None], "b", reverse=True)
     out = merge_cubes(c1, c2, overlap_resolver="add")
     # identical label sets => case 2 elementwise inner join. The join
     # itself stays null-unsafe (a NULL coord aligns nowhere, like
