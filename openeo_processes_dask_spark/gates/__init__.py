@@ -43,6 +43,16 @@ CHANGED = [
     # no longer pass a caller hint that skipped the label probe
     "merge_multiply",
     "merge_concat",
+    # the k-means assignment, the SemDeDup norm/cosine and the sketch
+    # level fold are now built from one parsed SQL string each
+    "kmeans_clusters",
+    "semdedup",
+    "semantic_dedup_recall",
+    "semantic_dedup_planted",
+    "semantic_dedup_incremental",
+    "streaming_semdedup_incremental",
+    "quantile_sketch",
+    "quantile_sketch_merged",
 ]
 
 _REPO = os.path.dirname(

@@ -33,65 +33,44 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SCALE = 1_000_000.0
 
 
-def _snap_micro(vec_col):
-    """array<float> -> exact integer micro-units as array<double>."""
-    return F.transform(
-        vec_col.cast("array<double>"),
-        lambda x: F.round(x * F.lit(_SCALE)),
+def _snap_micro(vec_col: str) -> str:
+    """SQL: array<float> column ``vec_col`` -> exact integer micro-units
+    as array<double>."""
+    quoted = "`" + vec_col.replace("`", "``") + "`"
+    return (
+        f"transform(CAST({quoted} AS ARRAY<DOUBLE>), "
+        f"x -> round(x * {_SCALE!r}D))"
     )
 
 
-def _assign_expr(
-    snapped_col, centroids: Sequence[Sequence[float]], memo_key=None
-):
+def _assign_expr(snapped_sql: str, centroids: Sequence[Sequence[float]]):
     """argmin_c Σ (v_i − c_i)² over literal centroids; ties -> lower id.
 
-    ``memo_key`` (r14, guide §5): a caller-supplied descriptor of how
-    ``snapped_col`` was derived (e.g. ``"snap::embedding"``). When
-    given, the built Column is memoized per (applicationId, memo_key,
-    centroid values) — building the k x (zip_with + aggregate)
-    higher-order tree costs ~0.5 s of py4j round-trips for k=8
-    (measured r14: the dominant construction cost of every assign
-    consumer), and centroids are deterministic per fixture, so repeated
-    query constructions reuse one immutable unresolved tree. Callers
-    MUST derive ``snapped_col`` purely from the key."""
-
-    def build():
-        cands = []
-        for ci, cent in enumerate(centroids):
-            # ONE py4j round-trip per centroid (ndarray literal) instead
-            # of one per element: k x dim F.lit calls cost ~1 ms of
-            # driver socket time each (guide §5 driver work; the same
-            # class as the PSL-matcher fix). Values are bit-identical —
-            # lit(ndarray) and array(lit...) build the same constant.
-            c = F.lit(np.asarray([float(v) for v in cent], dtype="float64"))
-            dist = F.aggregate(
-                F.zip_with(snapped_col, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            cands.append(F.struct(dist.alias("d"), F.lit(ci).alias("c")))
-        return F.array_min(F.array(*cands)).getField("c")
-
-    if memo_key is None:
-        return build()
-    from openeo_processes_dask_spark.exprmemo import memoized_exprs
-
-    return memoized_exprs(
-        (
-            "kmeans_assign",
-            memo_key,
-            tuple(tuple(float(v) for v in c) for c in centroids),
-        ),
-        build,
-    )
+    ``snapped_sql`` is the SQL text of the snapped ``array<double>``
+    vector. The whole k x (zip_with + aggregate) tree is one SQL string
+    parsed on the server, so building it costs the same few py4j round
+    trips at any k and dim. Each centroid is one string literal cast to
+    ``array<double>``: the optimizer folds it to the same constant an
+    ``array(<v>D, ...)`` would give, but the analyzer sees one node
+    instead of ``dim`` (per-literal arrays doubled analysis time).
+    ``repr`` round-trips every double exactly, -0.0, nan and inf
+    included."""
+    cands = []
+    for ci, cent in enumerate(centroids):
+        c = ",".join(repr(float(v)) for v in cent)
+        cands.append(
+            f"named_struct('d', aggregate(zip_with({snapped_sql}, "
+            f"CAST(split('{c}', ',') AS ARRAY<DOUBLE>), "
+            "(a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x), "
+            f"'c', {ci})"
+        )
+    return F.expr(f"array_min(array({', '.join(cands)})).c")
 
 
 def kmeans_fit(
@@ -111,7 +90,7 @@ def kmeans_fit(
             # snap through the SAME F.round expression as the data pass —
             # Python round() is half-even, F.round half-away-from-zero,
             # and the oracle replicates the latter
-            _snap_micro(F.col(vec_col)).alias("v"),
+            F.expr(_snap_micro(vec_col)).alias("v"),
             F.md5(
                 F.concat_ws("-", F.lit(str(seed)), F.col(id_col).cast("string"))
             ).alias("__k__"),
@@ -129,10 +108,10 @@ def kmeans_fit(
     centroids = [[float(x) for x in row["v"]] for row in rows]
     dim = len(centroids[0])
 
-    snapped = df.select(_snap_micro(F.col(vec_col)).alias("sv"))
+    snapped = df.select(F.expr(_snap_micro(vec_col)).alias("sv"))
     for _ in range(int(iterations)):
         assigned = snapped.select(
-            _assign_expr(F.col("sv"), centroids, memo_key="sv").alias("c"),
+            _assign_expr("sv", centroids).alias("c"),
             "sv",
         )
         sums = (
@@ -166,8 +145,5 @@ def kmeans_assign(
         cols.append(F.col(vec_col))
     return df.select(
         *cols,
-        _assign_expr(
-            _snap_micro(F.col(vec_col)), centroids,
-            memo_key=f"snap::{vec_col}",
-        ).alias("cluster"),
+        _assign_expr(_snap_micro(vec_col), centroids).alias("cluster"),
     )

@@ -284,13 +284,13 @@ def ingest_screen_multimodal(
     def fp(text):
         return F.md5(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "))
 
-    # r14 (guide §5/§2.6 applied to the DRIVER): each lane's
-    # construction is a chain of py4j round trips + per-Dataset Catalyst
-    # analysis — measured ~0.8 s serial for the four lanes. They are
-    # independent pure plan builders over caller-owned inputs, so build
-    # them from a thread pool (py4j is connection-per-thread; Datasets
-    # are immutable) and keep only the final assembly serial. Identical
-    # lane plans, identical results.
+    # Each lane's construction is a chain of py4j round trips, Catalyst
+    # analysis and, in the text lane, an eager checkpoint job. The lanes
+    # are independent plan builders over caller-owned inputs, so they
+    # are built from a thread pool (py4j is connection-per-thread;
+    # Datasets are immutable) and only the final assembly is serial.
+    # Measured with the SQL-string assignment: 0.34 s pooled against
+    # 0.57 s in order for the gate's library call (sf0.01, local[4]).
     def _exact_lane():
         return (
             df_new.select(
@@ -342,32 +342,30 @@ def ingest_screen_multimodal(
             .withColumn("__perc__", F.lit(True))
         )
 
-    builders = []  # (marker col, flag name, build fn)
+    builders = []  # (marker col, build fn)
     if seen_fingerprints is not None:
-        builders.append(("__exact__", "exact_dup", _exact_lane))
+        builders.append(("__exact__", _exact_lane))
     if seen_signatures is not None:
-        builders.append(("__text__", "text_near_dup", _text_lane))
+        builders.append(("__text__", _text_lane))
     if seen_members is not None:
-        builders.append(("__sem__", "semantic_dup", _sem_lane))
+        builders.append(("__sem__", _sem_lane))
     if seen_hashes is not None:
-        builders.append(("__perc__", "perceptual_dup", _perc_lane))
+        builders.append(("__perc__", _perc_lane))
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        futures = [pool.submit(b) for _, _, b in builders]
+        futures = [pool.submit(b) for _, b in builders]
         built = [f.result() for f in futures]
     out = df_new.select(F.col(id_col).alias("id"))
-    lanes = []  # (marker col, flag name)
-    for (m, flag, _), lane_df in zip(builders, built):
+    for lane_df in built:
         out = out.join(lane_df, "id", "left")
-        lanes.append((m, flag))
-    enabled = {m: f for m, f in lanes}
+    enabled = [m for m, _ in builders]
     all_flags = [
         ("__exact__", "exact_dup"), ("__text__", "text_near_dup"),
         ("__sem__", "semantic_dup"), ("__perc__", "perceptual_dup"),
     ]
     keep = None
-    for m, _ in lanes:
+    for m in enabled:
         clause = F.col(m).isNull()
         keep = clause if keep is None else (keep & clause)
     return out.select(
@@ -1437,38 +1435,30 @@ def shared_key_incremental(
 # driver time on every query CONSTRUCTION (the PSL-matcher cost class;
 # measured build=1.18 s vs exec=0.37 s for the whole signature table at
 # sf0.1). One server-parsed F.expr per column keeps the IDENTICAL
-# 64-min-aggregates-in-one-hash-aggregate plan at one round-trip each,
-# and the parsed Columns are memoized per (applicationId, n, seed) via
-# the shared exprmemo helper (ADVICE r13 #4) — Columns are immutable
-# unresolved trees, so reuse is safe. (A single array(min(..), ..)
-# aggregate expression was also tried: ~6x faster to build but ~18x
-# slower to EXECUTE — it falls off the codegen hash-aggregate path — so
-# per-column exprs, not one array expr.)
+# 64-min-aggregates-in-one-hash-aggregate plan at one round-trip each.
+# (A single array(min(..), ..) aggregate expression was also tried: ~6x
+# faster to build but ~18x slower to EXECUTE — it falls off the codegen
+# hash-aggregate path — so per-column exprs, not one array expr.)
 
 
 def _minhash_hash_cols(num_hashes: int, seed: int):
     """(aggregate Columns h0..h{n-1}, array(h0..h{n-1}) Column) for the
-    seeded universal-hash family — parsed server-side and memoized."""
-    from openeo_processes_dask_spark.exprmemo import memoized_exprs
+    seeded universal-hash family — parsed server-side."""
+    import random
 
-    def build():
-        import random
-
-        rnd = random.Random(seed)
-        coeffs = [
-            (rnd.randrange(1, _P), rnd.randrange(0, _P))
-            for _ in range(num_hashes)
-        ]
-        cols = [
-            F.expr(f"min(pmod({a}L * x + {b}L, {_P}L)) AS h{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ]
-        arr = F.expr(
-            "array(" + ",".join(f"h{i}" for i in range(num_hashes)) + ")"
-        )
-        return cols, arr
-
-    return memoized_exprs(("minhash_cols", num_hashes, seed), build)
+    rnd = random.Random(seed)
+    coeffs = [
+        (rnd.randrange(1, _P), rnd.randrange(0, _P))
+        for _ in range(num_hashes)
+    ]
+    cols = [
+        F.expr(f"min(pmod({a}L * x + {b}L, {_P}L)) AS h{i}")
+        for i, (a, b) in enumerate(coeffs)
+    ]
+    arr = F.expr(
+        "array(" + ",".join(f"h{i}" for i in range(num_hashes)) + ")"
+    )
+    return cols, arr
 
 
 def minhash_signatures(
@@ -1542,10 +1532,9 @@ def _bucket_cap(banded: DataFrame, key_cols: list[str], cap: int):
     return small, star
 
 
-# expr-parse memo for the banding projection (same rationale as
-# _MINHASH_COLS_MEMO: the functional construction costs ~10 py4j
-# round-trips per band — ~0.4 s of driver time per query construction
-# for the default 16 bands; the parsed Column is input-independent)
+# The banding projection is one server-parsed F.expr: the functional
+# construction costs ~10 py4j round-trips per band — ~0.4 s of driver
+# time per query construction for the default 16 bands.
 
 
 def _band_signatures(
@@ -1554,18 +1543,13 @@ def _band_signatures(
     """(id, band, bucket) rows from a signature table. The bucket is the
     md5 of the comma-joined band slice: engine-independent (reproducible
     in the DuckDB oracle), unlike Spark's private hash()."""
-    from openeo_processes_dask_spark.exprmemo import memoized_exprs
-
-    def build():
-        parts = ",".join(
-            f"struct({bi} AS band, md5(concat_ws(',', transform("
-            f"slice(signature, {bi * rows_per_band + 1}, {rows_per_band}),"
-            " h -> CAST(h AS STRING)))) AS bucket)"
-            for bi in range(bands)
-        )
-        return F.expr(f"explode(array({parts}))")
-
-    bb = memoized_exprs(("band_expr", bands, rows_per_band), build)
+    parts = ",".join(
+        f"struct({bi} AS band, md5(concat_ws(',', transform("
+        f"slice(signature, {bi * rows_per_band + 1}, {rows_per_band}),"
+        " h -> CAST(h AS STRING)))) AS bucket)"
+        for bi in range(bands)
+    )
+    bb = F.expr(f"explode(array({parts}))")
     return signatures.select("id", bb.alias("bb")).select(
         "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
@@ -2252,10 +2236,8 @@ def stream_ingest_screen_multimodal(
         )
     if seen_members is not None:
         enrich.append(
-            _assign_expr(
-                _snap_micro(F.col(vec_col)), centroids,
-                memo_key=f"snap::{vec_col}",
-            ).alias("__cluster__")
+            _assign_expr(_snap_micro(vec_col), centroids)
+            .alias("__cluster__")
         )
         enrich.append(F.col(vec_col).cast("array<double>").alias("__v__"))
     if seen_hashes is not None:
@@ -2501,46 +2483,41 @@ def simhash_signatures(
     return votes.select("id", sig.alias("simhash"))
 
 
-# expr-parse memo for the packed-popcount aggregate (same rationale as
-# _minhash_hash_cols: the functional packs construction costs ~7 py4j
-# round-trips per bit — ~140 for 60 bits, ~0.2 s of driver time per
-# query construction; the Columns are input-independent)
+# The packed-popcount aggregate is parsed server-side for the same
+# reason as _minhash_hash_cols: the functional packs construction costs
+# ~7 py4j round-trips per bit — ~140 for 60 bits, ~0.2 s of driver time
+# per query construction.
 
 
 def _simhash_pack_cols(bits: int):
     """(pack aggregate Columns p0.., signature-assembly Column) for the
-    3-counters-per-long popcount layout — parsed server-side, memoized."""
-    from openeo_processes_dask_spark.exprmemo import memoized_exprs
-
-    def build():
-        per, width = 3, 20
-        n_packs = (bits + per - 1) // per
-        packs = []
-        for g in range(n_packs):
-            terms = [
-                f"shiftleft(shiftright(h, {g * per + j}) & 1, {j * width})"
-                for j in range(per)
-                if g * per + j < bits
-            ]
-            packs.append(F.expr(f"sum({' + '.join(terms)}) AS p{g}"))
-        # Signature assembly as ONE server-parsed SQL expression:
-        # building the equivalent 60-deep nested Column tree driver-side
-        # measured ~5 s of pure Python before a single task ran. Bit
-        # terms are disjoint, so a plain sum of power-of-two literals
-        # equals the bitwise OR.
-        mask = (1 << width) - 1
-        terms = []
-        for b in range(bits):
-            g, j = divmod(b, per)
-            cnt = f"(shiftright(p{g}, {j * width}) & {mask})"
-            terms.append(
-                f"(CASE WHEN 2 * {cnt} > n THEN CAST({1 << b} AS BIGINT) "
-                f"ELSE CAST(0 AS BIGINT) END)"
-            )
-        sig = F.expr("(" + " + ".join(terms) + ")")
-        return packs, sig
-
-    return memoized_exprs(("simhash_packs", bits), build)
+    3-counters-per-long popcount layout — parsed server-side."""
+    per, width = 3, 20
+    n_packs = (bits + per - 1) // per
+    packs = []
+    for g in range(n_packs):
+        terms = [
+            f"shiftleft(shiftright(h, {g * per + j}) & 1, {j * width})"
+            for j in range(per)
+            if g * per + j < bits
+        ]
+        packs.append(F.expr(f"sum({' + '.join(terms)}) AS p{g}"))
+    # Signature assembly as ONE server-parsed SQL expression: building
+    # the equivalent 60-deep nested Column tree driver-side measured
+    # ~5 s of pure Python before a single task ran. Bit terms are
+    # disjoint, so a plain sum of power-of-two literals equals the
+    # bitwise OR.
+    mask = (1 << width) - 1
+    terms = []
+    for b in range(bits):
+        g, j = divmod(b, per)
+        cnt = f"(shiftright(p{g}, {j * width}) & {mask})"
+        terms.append(
+            f"(CASE WHEN 2 * {cnt} > n THEN CAST({1 << b} AS BIGINT) "
+            f"ELSE CAST(0 AS BIGINT) END)"
+        )
+    sig = F.expr("(" + " + ".join(terms) + ")")
+    return packs, sig
 
 
 def simhash_near_duplicates(
@@ -2572,27 +2549,18 @@ def simhash_near_duplicates(
 def _hamming_band_explode(col_name: str, bands: int, band_bits: int):
     """``explode(array(struct(band, chunk)...))`` Column splitting the
     64-bit signature column ``col_name`` into ``bands`` chunks — ONE
-    server-parsed F.expr, memoized per (applicationId, col, geometry)
-    via :mod:`..exprmemo` (r14, guide §5): the functional
+    server-parsed F.expr (r14, guide §5): the functional
     struct/shiftright/bitwiseAND construction costs ~5 py4j round-trips
-    per band (~0.2 s per banded side at 8 bands), paid on every query
-    construction. Identical expression tree, identical results."""
-    from openeo_processes_dask_spark.exprmemo import memoized_exprs
-
+    per band (~0.2 s per banded side at 8 bands). Identical expression
+    tree, identical results."""
     mask = (1 << band_bits) - 1
-
-    def build():
-        parts = ",".join(
-            f"struct({bi} AS band, "
-            f"shiftright(`{col_name}`, {bi * band_bits}) & {mask} "
-            "AS chunk)"
-            for bi in range(bands)
-        )
-        return F.expr(f"explode(array({parts}))")
-
-    return memoized_exprs(
-        ("hamming_bands", col_name, bands, band_bits), build
+    parts = ",".join(
+        f"struct({bi} AS band, "
+        f"shiftright(`{col_name}`, {bi * band_bits}) & {mask} "
+        "AS chunk)"
+        for bi in range(bands)
     )
+    return F.expr(f"explode(array({parts}))")
 
 
 def banded_hamming_incremental(

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 def _dot_lit(vec_col, query: Sequence[float]):
     """dot(embedding, literal query) as a pure expression (JVM-side)."""
     # one py4j call for the whole query vector (guide §5 driver work);
-    # bit-identical to array(lit, lit, ...) — see clustering._assign_expr
+    # bit-identical to array(lit, lit, ...)
     q = F.lit(np.asarray([float(v) for v in query], dtype="float64"))
     return F.aggregate(
         F.zip_with(vec_col.cast("array<double>"), q, lambda a, b: a * b),
@@ -882,17 +882,15 @@ def semdedup_incremental_pairs(
     projection from the plan. Results identical either way."""
     if new_tagged is None:
         new_tagged = _tag_members(df_new, centroids, id_col, vec_col)
-    from openeo_processes_dask_spark.exprmemo import memoized_exprs
-
     # norm hoist (r13, guide §1.2 per-task work): ||v|| once per row on
     # each side of the cluster join instead of once per candidate pair
     # (pair count is sum(|new_c| * |seen_c|) — the multiplied side).
-    # Same expression over the same data: values bit-identical.
-    # r14 (guide §5): the norm/dot/cosine HOF trees reference only the
-    # FIXED internal column names below, so they are memoized across
-    # constructions like the assignment expression.
-    n_v = memoized_exprs(
-        ("semdedup_norm_v",), lambda: _norm(F.col("v"))
+    # Same expression over the same data: values bit-identical. The
+    # norm and cosine trees are SQL strings parsed on the server, a
+    # constant few py4j round trips each.
+    n_v = F.expr(
+        "sqrt(aggregate(CAST(v AS ARRAY<DOUBLE>), 0D, "
+        "(acc, x) -> acc + x * x))"
     )
     seen = seen_members.select(
         F.col("id").alias("seen_id"), F.col("v").alias("v2"),
@@ -906,22 +904,11 @@ def semdedup_incremental_pairs(
         .join(seen, "cluster")
         .select("new_id", "v1", "n1", "seen_id", "v2", "n2")
     )
-
-    def _build_cos():
-        dot = F.aggregate(
-            F.zip_with(
-                F.col("v1").cast("array<double>"),
-                F.col("v2").cast("array<double>"),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.round(
-            F.try_divide(dot, F.col("n1") * F.col("n2")), 6
-        )
-
-    cos6 = memoized_exprs(("semdedup_cos6",), _build_cos)
+    cos6 = F.expr(
+        "round(try_divide(aggregate(zip_with(CAST(v1 AS ARRAY<DOUBLE>), "
+        "CAST(v2 AS ARRAY<DOUBLE>), (x, y) -> x * y), 0D, "
+        "(acc, x) -> acc + x), n1 * n2), 6)"
+    )
     return cands.select(
         "new_id", "seen_id", cos6.alias("cosine")
     ).where(F.col("cosine") >= threshold)

@@ -608,33 +608,14 @@ def quantile_sketch(
     # suffix count only grows as the walk descends, so greatest()
     # keeps exactly that first trigger); if no level triggers, 0.
     # The running total after the walk is the exact input count n.
-    # r14 (guide §5): the fold references only k and the fixed internal
-    # column names, so the built tree is memoized across constructions.
-    from openeo_processes_dask_spark.exprmemo import memoized_exprs
-
-    def _build_fold():
-        return F.aggregate(
-            F.reverse(
-                F.array_sort(
-                    F.collect_list(F.struct("__lvl__", "__c__"))
-                )
-            ),
-            F.struct(
-                F.lit(0).cast("long").alias("cum"),
-                F.lit(0).cast("int").alias("best"),
-            ),
-            lambda acc, x: F.struct(
-                (acc["cum"] + x["__c__"]).alias("cum"),
-                F.greatest(
-                    acc["best"],
-                    F.when(
-                        acc["cum"] + x["__c__"] > k, x["__lvl__"] + 1
-                    ).otherwise(F.lit(0)),
-                ).cast("int").alias("best"),
-            ),
-        )
-
-    fold = memoized_exprs(("qsk_fold", int(k)), _build_fold)
+    # One SQL string, parsed on the server: a constant py4j cost.
+    fold = F.expr(
+        "aggregate(reverse(array_sort(collect_list(struct(__lvl__, __c__)))),"
+        " named_struct('cum', CAST(0 AS BIGINT), 'best', CAST(0 AS INT)),"
+        " (acc, x) -> named_struct('cum', acc.cum + x.__c__, 'best',"
+        " CAST(greatest(acc.best, CASE WHEN acc.cum + x.__c__ > "
+        f"{int(k)} THEN x.__lvl__ + 1 ELSE 0 END) AS INT)))"
+    )
     meta = cnt.agg(fold.alias("__acc__")).select(
         F.least(F.col("__acc__.best"), F.lit(_QSK_BITS))
         .cast("int").alias("__level__"),

@@ -127,3 +127,29 @@ def test_malformed_ledger_file_raises_naming_it(tmp_path, content):
     (tmp_path / "CORRECTNESS_r3.json").write_text(content)
     with pytest.raises(ValueError, match="CORRECTNESS_r3.json"):
         ledger(str(tmp_path))
+
+
+def test_no_library_module_imports_exprmemo():
+    """The expression builders parse SQL strings at a constant py4j cost;
+    no module of the package may reach for the process-wide expression
+    memo again (Spark-free: the sources are parsed, not imported)."""
+    import ast
+    import pathlib
+
+    import openeo_processes_dask_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "exprmemo.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""] + [a.name for a in node.names]
+            else:
+                continue
+            if any("exprmemo" in n.split(".") for n in names):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders

@@ -1,20 +1,16 @@
-"""r13 optimization pins: the server-parsed, memoized expression
-constructions (MinHash hash columns, SimHash packs, LSH banding) must
-produce bit-identical results to the original functional Column
-construction, and the memo must actually hit. Also pins the PPJoin
-prefix-persist release contract."""
+"""r13 optimization pins: the server-parsed expression constructions
+(MinHash hash columns, SimHash packs, LSH banding) must produce
+bit-identical results to the original functional Column construction.
+Also pins the PPJoin prefix-persist release contract."""
 
 import random
 
 from pyspark.sql import functions as F
 
-from openeo_processes_dask_spark.exprmemo import _MEMO
 from openeo_processes_dask_spark.training.dedup import (
     _P,
     _band_signatures,
     _md5_to_long,
-    _minhash_hash_cols,
-    _simhash_pack_cols,
     jaccard_prefix_pairs,
     minhash_signatures,
     simhash_signatures,
@@ -35,14 +31,6 @@ ROWS = [
 
 def _corpus(spark):
     return spark.createDataFrame(ROWS, "doc_id long, text string")
-
-
-def test_minhash_cols_memo_hits(spark):
-    a_cols, a_arr = _minhash_hash_cols(64, 42)
-    b_cols, b_arr = _minhash_hash_cols(64, 42)
-    # memo hit: the parsed Column objects themselves are reused
-    assert a_cols is b_cols and a_arr is b_arr
-    assert _minhash_hash_cols(7, 42)[0] is not a_cols
 
 
 def test_minhash_signatures_match_functional_build(spark):
@@ -86,7 +74,6 @@ def test_simhash_signatures_match_functional_build(spark):
         r["id"]: r["simhash"]
         for r in simhash_signatures(df, "doc_id", "text").collect()
     }
-    assert _simhash_pack_cols(60)[1] is _simhash_pack_cols(60)[1]
     tok = (
         df.select(F.col("doc_id").alias("id"), F.col("text").alias("__t__"))
         .select("id", F.explode(tokens(F.lower(F.col("__t__")))).alias("w"))
@@ -129,12 +116,6 @@ def test_band_signatures_match_functional_build(spark):
     got = sorted(
         (r["id"], r["band"], r["bucket"])
         for r in _band_signatures(sigs, 16, 4).collect()
-    )
-    # keyed by app id: every live entry's key leads with the session's
-    # applicationId, never a bare parameter tuple
-    assert ("band_expr", 16, 4) not in _MEMO
-    assert any(
-        k[1:] == ("band_expr", 16, 4) and k[0] is not None for k in _MEMO
     )
     exp_rows = sigs.select(
         "id",

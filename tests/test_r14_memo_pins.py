@@ -1,9 +1,9 @@
 """r14 optimization pins.
 
-1. The memoized k-means assignment Column and the memoized Hamming
+1. The SQL-string k-means assignment and the server-parsed Hamming
    band-explode expression must produce bit-identical results to the
-   original functional constructions (the r13 expr-memo contract,
-   extended to the two builders r14 memoized).
+   original functional constructions, and the assignment's py4j cost
+   must not grow with k.
 2. The ``load_table`` memo is METADATA-ONLY (VERDICT r13 #5): the
    memoized DataFrame carries no cache/checkpoint in its plan, and a
    touched mtime invalidates the entry — the door to silent cross-run
@@ -12,6 +12,7 @@
 
 import os
 import shutil
+import struct
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -20,42 +21,125 @@ from openeo_processes_dask_spark.exprmemo import _MEMO, memoized_exprs
 from openeo_processes_dask_spark.training.clustering import (
     _assign_expr,
     _snap_micro,
+    kmeans_fit,
 )
 from openeo_processes_dask_spark.training.dedup import (
     _hamming_band_explode,
     banded_hamming_incremental,
 )
 
-CENTS = [
-    [1.5, -2.0, 0.25],
-    [0.0, 0.0, 0.0],
-    [-3.75, 1.125, 2.5],
-]
 
-VECS = [
-    (0, [1.4, -2.1, 0.3]),
-    (1, [0.1, 0.0, -0.05]),
-    (2, [-3.7, 1.2, 2.4]),
-    (3, [100.0, -50.0, 25.0]),
-]
+def _lambda_assign(snapped, centroids):
+    """The Column-lambda build ``_assign_expr`` replaced: one ndarray
+    literal per centroid, k x (zip_with + aggregate) folds, argmin over
+    (d, c) structs."""
+    cands = []
+    for ci, cent in enumerate(centroids):
+        c = F.lit(np.asarray([float(v) for v in cent], dtype="float64"))
+        dist = F.aggregate(
+            F.zip_with(snapped, c, lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        cands.append(F.struct(dist.alias("d"), F.lit(ci).alias("c")))
+    return F.array_min(F.array(*cands)).getField("c")
 
 
-def test_assign_expr_memo_identity_and_equality(spark):
-    df = spark.createDataFrame(VECS, "vec_id long, embedding array<double>")
-    snapped = _snap_micro(F.col("embedding"))
-    memo1 = _assign_expr(snapped, CENTS, memo_key="snap::embedding")
-    memo2 = _assign_expr(snapped, CENTS, memo_key="snap::embedding")
-    assert memo1 is memo2  # memo hit: one immutable unresolved tree
-    fresh = _assign_expr(snapped, CENTS)  # functional, unmemoized
-    got = {r["vec_id"]: r["c"] for r in df.select(
-        "vec_id", memo1.alias("c")).collect()}
-    exp = {r["vec_id"]: r["c"] for r in df.select(
-        "vec_id", fresh.alias("c")).collect()}
-    assert got == exp
-    # different centroids -> different entry
-    other = _assign_expr(snapped, [[9.0, 9.0, 9.0]] + CENTS[1:],
-                         memo_key="snap::embedding")
-    assert other is not memo1
+def _lambda_snap(vec_col):
+    return F.transform(
+        vec_col.cast("array<double>"), lambda x: F.round(x * F.lit(1e6))
+    )
+
+
+def _bits(values):
+    return [struct.pack(">d", v) for v in values]
+
+
+def _assign_both(df, cents):
+    """{vec_id: cluster} from the SQL build, after checking it against
+    the lambda build row by row (snapped values bit for bit)."""
+    got = df.select(
+        "vec_id",
+        F.expr(_snap_micro("embedding")).alias("sv"),
+        _assign_expr(_snap_micro("embedding"), cents).alias("c"),
+    ).collect()
+    exp = {
+        r["vec_id"]: r for r in df.select(
+            "vec_id",
+            _lambda_snap(F.col("embedding")).alias("sv"),
+            _lambda_assign(_lambda_snap(F.col("embedding")), cents)
+            .alias("c"),
+        ).collect()
+    }
+    assert len(got) == len(exp) == df.count()
+    for r in got:
+        e = exp[r["vec_id"]]
+        assert _bits(r["sv"]) == _bits(e["sv"]), r["vec_id"]
+        assert r["c"] == e["c"], r["vec_id"]
+    return {r["vec_id"]: r["c"] for r in got}
+
+
+def test_assign_expr_sql_matches_lambda_build_bitwise(spark):
+    rng = np.random.default_rng(7)
+    dim = 8
+    rows = [(i, [float(x) for x in rng.normal(0, 2, dim)])
+            for i in range(300)]
+    rows += [
+        (300, [0.0] * dim), (301, [-0.0] * dim), (302, [1e-11] * dim),
+        (303, [1.0] + [0.0] * (dim - 1)),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    fitted = kmeans_fit(df, k=5, iterations=2)
+    assert any(v != int(v) for cent in fitted for v in cent)
+    ids = _assign_both(df, fitted + [
+        [-0.0] * dim,
+        [1e-05] * dim,
+        [1e16] + [0.0] * (dim - 1),
+        [123.33333333333333] * dim,
+        [float("inf")] * dim,
+        [float("nan")] * dim,
+    ])
+    assert len(set(ids.values())) > 3
+    # row 303 snaps to (1e6, 0, ...): equidistant from ids 1 and 2, and
+    # the tie goes to the lower id
+    ids = _assign_both(df, [[9e6] * dim, [0.0] * dim,
+                            [2e6] + [0.0] * (dim - 1)])
+    assert ids[303] == 1
+    # 0.1 + 0.2 is one ulp above 0.3: row 300 (the origin) is nearer to
+    # id 1 only if both centroids keep every digit
+    ids = _assign_both(df, [[0.1 + 0.2] * dim, [-0.3] * dim])
+    assert ids[300] == 1
+
+
+def _count_sends(monkeypatch):
+    import py4j.clientserver
+    import py4j.java_gateway
+
+    sent = []
+    for cls in (py4j.clientserver.ClientServerConnection,
+                py4j.java_gateway.GatewayConnection):
+        orig = cls.send_command
+
+        def counted(conn, command, *a, _orig=orig, **k):
+            if not command.startswith("m\nd\n"):  # object release
+                sent.append(command)
+            return _orig(conn, command, *a, **k)
+
+        monkeypatch.setattr(cls, "send_command", counted)
+    return sent
+
+
+def test_assign_expr_py4j_sends_constant_in_k(spark, monkeypatch):
+    rng = np.random.default_rng(3)
+    snapped = _snap_micro("embedding")
+    _assign_expr(snapped, rng.normal(size=(2, 64)).tolist())  # warm
+    sent = _count_sends(monkeypatch)
+    counts = []
+    for k in (4, 16):
+        del sent[:]
+        _assign_expr(snapped, (rng.normal(size=(k, 64)) * 1e6).tolist())
+        counts.append(len(sent))
+    assert counts[0] == counts[1] <= 5, counts
 
 
 def test_hamming_band_explode_matches_functional(spark):
@@ -91,10 +175,6 @@ def test_hamming_band_explode_matches_functional(spark):
         for r in exp_rows.collect()
     )
     assert got == exp
-    # memo hit
-    assert _hamming_band_explode("sig", 8, 8) is _hamming_band_explode(
-        "sig", 8, 8
-    )
 
 
 def test_banded_hamming_incremental_end_to_end(spark):
