@@ -53,6 +53,31 @@ CHANGED = [
     "streaming_semdedup_incremental",
     "quantile_sketch",
     "quantile_sketch_merged",
+    # the whole-document fingerprint comes from textanalysis.doc_fingerprint
+    # instead of an inline copy per operator
+    "dedup_exact",
+    "training_pipeline",
+    "curation_pipeline",
+    "dedup_incremental",
+    "incremental_curation",
+    "corpus_diff",
+    # the MinHash coefficients, band buckets, agreement estimate and
+    # per-row stream signature each come from one SQL fragment, and
+    # ingest_screen is a projection of ingest_screen_multimodal
+    "minhash_near_dups",
+    "dedup_recall",
+    "dedup_clusters",
+    "dedup_clusters_star",
+    "leakage_split",
+    "minhash_incremental",
+    "ingest_screen",
+    "ingest_screen_prebanded",
+    "streaming_minhash_screen",
+    # every banded Hamming lane runs through one join/verify/star-cap core
+    "simhash_near_dups",
+    "simhash_incremental",
+    "image_near_dups",
+    "image_near_dups_incremental",
 ]
 
 _REPO = os.path.dirname(

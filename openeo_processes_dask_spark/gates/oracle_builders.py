@@ -6,6 +6,7 @@ query/oracle semantics unchanged. See gates/__init__.py for registry order.
 
 from __future__ import annotations
 
+import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
@@ -14,6 +15,13 @@ from pyspark.sql import functions as F  # noqa: F401
 from .common import _GRID_CTE
 
 _MD5LONG = "CAST('0x' || substr(md5({v}), 1, 15) AS BIGINT)"
+
+
+def _oracle_sf_dir() -> str:
+    """The fixture directory the replay builders read, looked up at call
+    time: ``all_oracles`` keys its memo on ``ORACLE_SF_DIR``."""
+    return os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+
 
 #: the engine's whitespace contract: the JVM ``\s`` class (ASCII only)
 _BPE_WS = re.compile("[ \\t\\n\\x0b\\f\\r]+")
@@ -868,14 +876,12 @@ def _random_forest_oracle_sql(
     every tree as a SQL CASE chain. DuckDB evaluates the ensemble
     (left-to-right tree sum, matching ForestModel.predict) on the same test
     rows — a full decision-rules oracle, not a row count."""
-    import os
-
     import duckdb
     import numpy as np
 
     from openeo_processes_dask_spark.ml.random_forest import _build_tree
 
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf = _oracle_sf_dir()
     con = duckdb.connect()
     pdf = con.sql(
         f"""
@@ -925,8 +931,6 @@ def _rf_xgb_oracle_sql(
     bootstrap over the o_orderkey-sorted matrix as _random_forest_oracle_
     sql), then through the SAME xgboost-JSON export and the SQL compiler —
     the interchange document itself is the shared artifact under test."""
-    import os
-
     import duckdb
     import numpy as np
 
@@ -939,7 +943,7 @@ def _rf_xgb_oracle_sql(
         xgboost_json_to_sql,
     )
 
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf = _oracle_sf_dir()
     con = duckdb.connect()
     pdf = con.sql(
         f"""
@@ -1040,11 +1044,10 @@ def _logreg_quality_oracle_sql(
     sigmoid SQL evaluation."""
     import hashlib
     import math
-    import os
 
     import duckdb
 
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf = _oracle_sf_dir()
     con = duckdb.connect()
     rows = con.sql(
         f"SELECT doc_id, text, lang FROM '{sf}/documents.parquet'"
@@ -1177,11 +1180,9 @@ def _corpus_mix_oracle_sql() -> str:
     9)) on the same parquet, then inlines the rates as literals so the
     md5-uniform filter is bit-identical. Python rounding is used HERE too
     (not SQL round) so banker's-rounding edge cases cannot diverge."""
-    import os
-
     import duckdb
 
-    sf_dir = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     weights = {"src0": 0.4, "src1": 0.4, "src2": 0.2}
     budget = 50_000
     totals = dict(
@@ -1449,11 +1450,9 @@ def _bpe_tokens_oracle_sql(num_merges: int = 30) -> str:
     (pair-count DESC, pair ASC), same left-to-right non-overlapping
     merge — then encodes every document and emits the per-doc token
     counts as VALUES."""
-    import os
-
     import duckdb
 
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf = _oracle_sf_dir()
     rows = duckdb.sql(
         f"SELECT doc_id, text FROM '{sf}/documents.parquet'"
     ).fetchall()
@@ -1528,12 +1527,10 @@ def _image_near_dups_oracle_sql(
     NumPy (same seeds), computes dHash serially, and brute-forces ALL
     pairs at hamming <= max_hamming — the banded join must equal the
     exact answer (bands > max_hamming gives provably complete recall)."""
-    import os
-
     import duckdb
     import numpy as np
 
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf = _oracle_sf_dir()
     ids = [
         r[0]
         for r in duckdb.sql(
@@ -1592,12 +1589,10 @@ def _image_incremental_oracle_sql(
     dHash replay as the batch image oracle, brute-forcing NEW x SEEN
     pairs only — banding with bands > max_hamming is lossless, so the
     engine's incremental screen must equal the exact answer."""
-    import os
-
     import duckdb
     import numpy as np
 
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf = _oracle_sf_dir()
     rows = duckdb.sql(
         f"SELECT DISTINCT doc_id FROM '{sf}/documents.parquet' "
         f"WHERE doc_id < {new_hi} ORDER BY doc_id"
@@ -1654,12 +1649,10 @@ def _audio_near_dups_oracle_sql(id_cap: int = 99, min_shared: int = 8) -> str:
     NumPy (same seeds), extracts the same consecutive-peak-bin landmarks
     serially, and counts shared landmarks over all pairs — the equi-join
     must equal the exact answer."""
-    import os
-
     import duckdb
     import numpy as np
 
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf = _oracle_sf_dir()
     ids = [
         r[0]
         for r in duckdb.sql(
@@ -1709,12 +1702,10 @@ def _audio_incremental_oracle_sql(
     """Twin of q_audio_near_dups_incremental: the same NumPy melody /
     landmark replay as the batch audio oracle, counting shared
     landmarks over NEW x SEEN only."""
-    import os
-
     import duckdb
     import numpy as np
 
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf = _oracle_sf_dir()
     ids = [
         r[0]
         for r in duckdb.sql(
@@ -1766,12 +1757,10 @@ def _video_near_dups_oracle_sql(id_cap: int = 105, min_shared: int = 4) -> str:
     """Twin of q_video_near_dups: regenerates the frame sequences in
     NumPy (same seeds), hashes every frame with the serial dHash, and
     counts shared DISTINCT frame hashes over all pairs."""
-    import os
-
     import duckdb
     import numpy as np
 
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf = _oracle_sf_dir()
     ids = [
         r[0]
         for r in duckdb.sql(
@@ -1830,11 +1819,10 @@ def _bpe_ids_oracle_sql(num_merges: int = 30) -> str:
     sorted base alphabet, merge outputs in learned order); emits per-doc
     (id, n_ids, md5 of the comma-joined id sequence) as VALUES."""
     import hashlib
-    import os
 
     import duckdb
 
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf = _oracle_sf_dir()
     rows = duckdb.sql(
         f"SELECT doc_id, text FROM '{sf}/documents.parquet'"
     ).fetchall()
@@ -2325,12 +2313,10 @@ def _scene_changes_oracle_sql(id_cap: int = 105, threshold: int = 16) -> str:
     and computes the consecutive-frame Hamming distances in SQL — the
     window/xor mechanics are re-derived by DuckDB, only the hashes are
     replayed."""
-    import os
-
     import duckdb
     import numpy as np
 
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf = _oracle_sf_dir()
     ids = [
         r[0]
         for r in duckdb.sql(
@@ -2403,12 +2389,11 @@ def _isotonic_oracle_sql() -> str:
     INDEPENDENT PAVA (exact Fractions instead of the engine's integer
     cross-multiplication) — same unique optimum, different mechanism;
     the fitted table inlines as VALUES."""
-    import os
     from fractions import Fraction
 
     import duckdb
 
-    sf = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf = _oracle_sf_dir()
     rows = duckdb.sql(
         f"SELECT n_chars, count(*) AS n, "
         f"sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS p "

@@ -39,12 +39,16 @@ from pyspark.sql import functions as F
 _SCALE = 1_000_000.0
 
 
+def _quote(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _snap_micro(vec_col: str) -> str:
     """SQL: array<float> column ``vec_col`` -> exact integer micro-units
     as array<double>."""
-    quoted = "`" + vec_col.replace("`", "``") + "`"
     return (
-        f"transform(CAST({quoted} AS ARRAY<DOUBLE>), "
+        f"transform(CAST({_quote(vec_col)} AS ARRAY<DOUBLE>), "
         f"x -> round(x * {_SCALE!r}D))"
     )
 
@@ -139,11 +143,10 @@ def kmeans_assign(
     """(id[, vec], cluster) for every vector against fitted centroids —
     one shuffle-free projection. ``keep_vec`` carries the vector column
     through so consumers that need (vector, cluster) together (e.g.
-    semdedup's within-cluster join) avoid a corpus-wide re-join."""
-    cols = [F.col(id_col)]
-    if keep_vec:
-        cols.append(F.col(vec_col))
-    return df.select(
-        *cols,
-        _assign_expr(_snap_micro(vec_col), centroids).alias("cluster"),
-    )
+    semdedup's within-cluster join) avoid a corpus-wide re-join. The
+    snapped vector is projected once, as in :func:`kmeans_fit`, rather
+    than inlined into each of the k distance terms."""
+    cols = [id_col, vec_col] if keep_vec else [id_col]
+    return df.selectExpr(
+        *[_quote(c) for c in cols], f"{_snap_micro(vec_col)} AS __sv__"
+    ).select(*cols, _assign_expr("__sv__", centroids).alias("cluster"))

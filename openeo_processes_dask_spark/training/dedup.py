@@ -1,6 +1,13 @@
 """Deduplication at corpus scale: exact, n-gram Jaccard, MinHash+LSH,
 SimHash.
 
+Every lane of one hash family shares its definitions: the whole-document
+fingerprint is ``textanalysis.doc_fingerprint``; the MinHash coefficients,
+band buckets, signature-agreement estimate and per-row stream signature
+are one SQL fragment each (``_minhash_coeffs`` .. ``_agreement_sql``);
+every 64-bit-signature lane (SimHash, perceptual hashes) runs the one
+banded Hamming join ``_banded_hamming``.
+
 Shuffle topology is the whole game at 100 TB:
 - exact dedup: one hash-groupBy on a 32-char digest (not the full text) —
   the shuffle carries digests, not documents.
@@ -12,10 +19,14 @@ Shuffle topology is the whole game at 100 TB:
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from openeo_processes_dask_spark.training.clustering import _quote
 from openeo_processes_dask_spark.training.textanalysis import (
+    doc_fingerprint,
     shingles_from_tokens,
     tokens,
 )
@@ -91,9 +102,10 @@ def _spread(df: DataFrame, key: str | None = None) -> DataFrame:
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Group by content digest; keep the min id as canonical.
     Returns (keep_id, n_copies, fingerprint)."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
     return (
-        df.select(F.col(id_col), F.md5(norm).alias("fingerprint"))
+        df.select(
+            F.col(id_col), doc_fingerprint(F.col(text_col)).alias("fingerprint")
+        )
         .groupBy("fingerprint")
         .agg(
             F.min(id_col).alias("keep_id"),
@@ -118,12 +130,10 @@ def dedup_against(
     side is a persisted fingerprint table (what exact_duplicates emits),
     read with its own column pruning. Within-batch duplicates are kept —
     compose with exact_duplicates for full dedup."""
-
-    def fp(text):
-        return F.md5(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "))
-
-    seen = df_seen.select(fp(F.col(text_col)).alias("fingerprint")).distinct()
-    new_fp = df_new.withColumn("fingerprint", fp(F.col(text_col)))
+    seen = df_seen.select(
+        doc_fingerprint(F.col(text_col)).alias("fingerprint")
+    ).distinct()
+    new_fp = df_new.withColumn("fingerprint", doc_fingerprint(F.col(text_col)))
     return new_fp.join(seen, "fingerprint", "left_anti").select(*df_new.columns)
 
 
@@ -166,45 +176,16 @@ def ingest_screen(
     ``new_signatures`` (the batch's own signature table, same family)
     to skip the near lane's inline build (see
     :func:`minhash_incremental`). Returns
-    ``(id, exact_dup, near_dup, keep)``, one row per new document."""
-
-    def fp(text):
-        return F.md5(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "))
-
-    new_ids = df_new.select(F.col(id_col).alias("id"), F.col(text_col))
-    exact = (
-        new_ids.withColumn("fingerprint", fp(F.col(text_col)))
-        .join(
-            seen_fingerprints.select("fingerprint").distinct(),
-            "fingerprint",
-            "left_semi",
-        )
-        .select("id")
-        .withColumn("__exact__", F.lit(True))
-    )
-    near = (
-        minhash_incremental(
-            df_new, seen_signatures, id_col, text_col,
-            n=n, num_hashes=num_hashes, bands=bands,
-            threshold=threshold, seed=seed, seen_bands=seen_bands,
-            new_signatures=new_signatures,
-        )
-        .select(F.col("new_id").alias("id"))
-        .distinct()
-        .withColumn("__near__", F.lit(True))
-    )
-    return (
-        new_ids.select("id")
-        .join(exact, "id", "left")
-        .join(near, "id", "left")
-        .select(
-            "id",
-            F.coalesce(F.col("__exact__"), F.lit(False)).alias("exact_dup"),
-            F.coalesce(F.col("__near__"), F.lit(False)).alias("near_dup"),
-            (
-                F.col("__exact__").isNull() & F.col("__near__").isNull()
-            ).alias("keep"),
-        )
+    ``(id, exact_dup, near_dup, keep)``, one row per new document: the
+    exact and text lanes of :func:`ingest_screen_multimodal`, with
+    ``text_near_dup`` named ``near_dup``."""
+    return ingest_screen_multimodal(
+        df_new, seen_fingerprints, seen_signatures, id_col=id_col,
+        text_col=text_col, n=n, num_hashes=num_hashes, bands=bands,
+        text_threshold=threshold, seed=seed, seen_bands=seen_bands,
+        new_signatures=new_signatures,
+    ).select(
+        "id", "exact_dup", F.col("text_near_dup").alias("near_dup"), "keep"
     )
 
 
@@ -230,11 +211,11 @@ def ingest_screen_multimodal(
     seen_bands: DataFrame | None = None,
     new_signatures: DataFrame | None = None,
 ) -> DataFrame:
-    """Full multi-modality ingest verdict (r13, VERDICT r12 #4):
-    :func:`ingest_screen`'s exact + MinHash text lanes composed with
-    the semantic (:func:`~..similarity.semdedup_incremental_pairs`)
-    and perceptual (:func:`banded_hamming_incremental`) screens the
-    r12 matrix built — ONE relation per increment answering "have we
+    """Full multi-modality ingest verdict (r13, VERDICT r12 #4): the
+    exact (fingerprint) and MinHash text lanes composed with the
+    semantic (:func:`~..similarity.semdedup_incremental_pairs`) and
+    perceptual (:func:`banded_hamming_incremental`) screens the r12
+    matrix built — ONE relation per increment answering "have we
     seen this content, in any modality, before?".
 
     ``df_new`` carries one row per new item with ALL modality columns:
@@ -261,7 +242,8 @@ def ingest_screen_multimodal(
     Returns ``(id, exact_dup, text_near_dup, semantic_dup,
     perceptual_dup, keep)``, one row per new item; ``keep`` = no
     enabled lane fired. Within-batch duplicates are out of scope by the
-    same composition contract as :func:`ingest_screen`."""
+    same composition contract as :func:`ingest_screen`, which is this
+    screen's exact and text lanes."""
     from openeo_processes_dask_spark.training.similarity import (
         semdedup_incremental_pairs,
     )
@@ -281,9 +263,6 @@ def ingest_screen_multimodal(
             "least one archive screen table"
         )
 
-    def fp(text):
-        return F.md5(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "))
-
     # Each lane's construction is a chain of py4j round trips, Catalyst
     # analysis and, in the text lane, an eager checkpoint job. The lanes
     # are independent plan builders over caller-owned inputs, so they
@@ -295,7 +274,7 @@ def ingest_screen_multimodal(
         return (
             df_new.select(
                 F.col(id_col).alias("id"),
-                fp(F.col(text_col)).alias("fingerprint"),
+                doc_fingerprint(F.col(text_col)).alias("fingerprint"),
             )
             .join(
                 seen_fingerprints.select("fingerprint").distinct(),
@@ -402,12 +381,14 @@ def corpus_diff(
     Ids must be unique per side (enforce upstream with exact_duplicates);
     duplicate ids would cross-multiply in the join.
     """
-
-    def fp(text):
-        return F.md5(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "))
-
-    o = df_old.select(F.col(id_col).alias("doc_id"), fp(F.col(text_col)).alias("fp_old"))
-    n = df_new.select(F.col(id_col).alias("doc_id"), fp(F.col(text_col)).alias("fp_new"))
+    o = df_old.select(
+        F.col(id_col).alias("doc_id"),
+        doc_fingerprint(F.col(text_col)).alias("fp_old"),
+    )
+    n = df_new.select(
+        F.col(id_col).alias("doc_id"),
+        doc_fingerprint(F.col(text_col)).alias("fp_new"),
+    )
     return (
         o.join(n, "doc_id", "full_outer")
         .select(
@@ -1429,36 +1410,86 @@ def shared_key_incremental(
     )
 
 
-# Optimization r13 (guide §1/§5): building the per-hash aggregate Columns
-# functionally (min ∘ pmod ∘ lit·col+lit per hash) costs ~8-9 py4j
-# round-trips per hash function — ~550 for the default 64, ~0.7 s of pure
-# driver time on every query CONSTRUCTION (the PSL-matcher cost class;
-# measured build=1.18 s vs exec=0.37 s for the whole signature table at
-# sf0.1). One server-parsed F.expr per column keeps the IDENTICAL
-# 64-min-aggregates-in-one-hash-aggregate plan at one round-trip each.
-# (A single array(min(..), ..) aggregate expression was also tried: ~6x
-# faster to build but ~18x slower to EXECUTE — it falls off the codegen
-# hash-aggregate path — so per-column exprs, not one array expr.)
+# The MinHash family. Each decision has one definition here, written as
+# SQL text that the server parses: building the same expressions from
+# Column objects costs ~8-10 py4j round trips per hash function or band
+# (~0.7 s per query construction at the default 64 hashes, measured at
+# sf0.1), while one F.expr costs a few sends at any size.
+
+
+def _minhash_coeffs(num_hashes: int, seed: int) -> list[tuple[int, int]]:
+    """(a, b) per hash function of the seeded universal-hash family
+    h(x) = (a·x + b) mod p — seeded literals, so runs are reproducible."""
+    rnd = random.Random(seed)
+    return [
+        (rnd.randrange(1, _P), rnd.randrange(0, _P))
+        for _ in range(num_hashes)
+    ]
+
+
+def _minhash_sql(a: int, b: int, x: str) -> str:
+    """SQL: h(x) for one (a, b) pair; pmod keeps it in [0, p)."""
+    return f"pmod({a}L * {x} + {b}L, {_P}L)"
 
 
 def _minhash_hash_cols(num_hashes: int, seed: int):
     """(aggregate Columns h0..h{n-1}, array(h0..h{n-1}) Column) for the
-    seeded universal-hash family — parsed server-side."""
-    import random
-
-    rnd = random.Random(seed)
-    coeffs = [
-        (rnd.randrange(1, _P), rnd.randrange(0, _P))
-        for _ in range(num_hashes)
-    ]
+    batch signature: one ``min`` aggregate per hash over the exploded
+    digests ``x``. Per-column exprs, not one array expr: a single
+    ``array(min(..), ..)`` aggregate was ~6x faster to build but ~18x
+    slower to EXECUTE — it falls off the codegen hash-aggregate path."""
     cols = [
-        F.expr(f"min(pmod({a}L * x + {b}L, {_P}L)) AS h{i}")
-        for i, (a, b) in enumerate(coeffs)
+        F.expr(f"min({_minhash_sql(a, b, 'x')}) AS h{i}")
+        for i, (a, b) in enumerate(_minhash_coeffs(num_hashes, seed))
     ]
     arr = F.expr(
         "array(" + ",".join(f"h{i}" for i in range(num_hashes)) + ")"
     )
     return cols, arr
+
+
+def _minhash_row_signature(xs: str, num_hashes: int, seed: int) -> str:
+    """SQL: the per-row signature the streaming screens use, over the
+    materialized shingle-digest array column ``xs`` — one
+    ``array_min(transform(...))`` per hash function. The batch lane's
+    explode + groupBy signature is ~10x faster under codegen (see
+    :func:`minhash_signatures`), but on a stream that groupBy(id) would
+    be a stateful aggregate holding every doc id forever."""
+    return "array(" + ", ".join(
+        f"array_min(transform({xs}, x -> {_minhash_sql(a, b, 'x')}))"
+        for a, b in _minhash_coeffs(num_hashes, seed)
+    ) + ")"
+
+
+def _shingle_digests(toks, n: int):
+    """Distinct shingle digests in [0, p) of a materialized token array
+    column — the streaming screens' per-row hash input."""
+    return F.transform(
+        F.array_distinct(shingles_from_tokens(toks, n)),
+        lambda s: F.pmod(_md5_to_long(s), F.lit(_P)),
+    )
+
+
+def _band_bucket_sql(sig: str, bi: int, rows_per_band: int) -> str:
+    """SQL: band ``bi``'s bucket key of signature column ``sig`` — the
+    md5 of the comma-joined band slice: engine-independent
+    (reproducible in the DuckDB oracle), unlike Spark's private
+    hash()."""
+    return (
+        "md5(concat_ws(',', transform("
+        f"slice({sig}, {bi * rows_per_band + 1}, {rows_per_band}),"
+        " h -> CAST(h AS STRING))))"
+    )
+
+
+def _agreement_sql(sig1: str, sig2: str, num_hashes: int) -> str:
+    """SQL: the MinHash Jaccard estimate, the share of equal signature
+    slots. The divisor is a DOUBLE literal (``64.0D``): a bare ``64.0``
+    parses as DECIMAL."""
+    return (
+        f"size(filter(zip_with({sig1}, {sig2}, (x, y) -> x = y), "
+        f"eq -> eq)) / {float(num_hashes)!r}D"
+    )
 
 
 def minhash_signatures(
@@ -1499,7 +1530,6 @@ def minhash_signatures(
         )
         .select("id", F.pmod(_md5_to_long(F.col("sh")), F.lit(_P)).alias("x"))
     )
-    # (a*x + b) mod p per hash fn; pmod keeps it in [0, p)
     hash_cols, sig_array = _minhash_hash_cols(num_hashes, seed)
     agg = sh.groupBy("id").agg(*hash_cols)
     return agg.select("id", sig_array.alias("signature"))
@@ -1517,8 +1547,6 @@ def _bucket_cap(banded: DataFrame, key_cols: list[str], cap: int):
     the all-pairs join would have kept: the documented recall/cost trade
     of any hub-based capping; keep the cap comfortably above typical
     family sizes if pairwise recall inside mega-buckets matters."""
-    from pyspark.sql import Window
-
     wb = Window.partitionBy(*key_cols)
     sized = banded.withColumn("__n", F.count(F.lit(1)).over(wb)).withColumn(
         "__m", F.min("id").over(wb)
@@ -1532,25 +1560,24 @@ def _bucket_cap(banded: DataFrame, key_cols: list[str], cap: int):
     return small, star
 
 
-# The banding projection is one server-parsed F.expr: the functional
-# construction costs ~10 py4j round-trips per band — ~0.4 s of driver
-# time per query construction for the default 16 bands.
+def _band_explode(sig: str, bands: int, rows_per_band: int):
+    """``explode(array(struct(band, bucket)...))`` Column over signature
+    column ``sig``, one struct per band."""
+    parts = ",".join(
+        f"struct({bi} AS band, "
+        f"{_band_bucket_sql(sig, bi, rows_per_band)} AS bucket)"
+        for bi in range(bands)
+    )
+    return F.expr(f"explode(array({parts}))")
 
 
 def _band_signatures(
     signatures: DataFrame, bands: int, rows_per_band: int
 ) -> DataFrame:
-    """(id, band, bucket) rows from a signature table. The bucket is the
-    md5 of the comma-joined band slice: engine-independent (reproducible
-    in the DuckDB oracle), unlike Spark's private hash()."""
-    parts = ",".join(
-        f"struct({bi} AS band, md5(concat_ws(',', transform("
-        f"slice(signature, {bi * rows_per_band + 1}, {rows_per_band}),"
-        " h -> CAST(h AS STRING)))) AS bucket)"
-        for bi in range(bands)
-    )
-    bb = F.expr(f"explode(array({parts}))")
-    return signatures.select("id", bb.alias("bb")).select(
+    """(id, band, bucket) rows from a signature table."""
+    return signatures.select(
+        "id", _band_explode("signature", bands, rows_per_band).alias("bb")
+    ).select(
         "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
 
@@ -1831,16 +1858,13 @@ def minhash_near_duplicates(
         s2 = sigs.select(
             F.col("id").alias("id2"), F.col("signature").alias("sig2")
         )
-        est = F.size(
-            F.filter(
-                F.zip_with(F.col("sig1"), F.col("sig2"), lambda x, y: x == y),
-                lambda eq: eq,
-            )
-        ) / F.lit(float(num_hashes))
         out = (
             cands.join(s1, "id1")
             .join(s2, "id2")
-            .withColumn("est_jaccard", est)
+            .withColumn(
+                "est_jaccard",
+                F.expr(_agreement_sql("sig1", "sig2", num_hashes)),
+            )
             .where(F.col("est_jaccard") >= threshold)
             .select("id1", "id2", "est_jaccard")
         )
@@ -1948,16 +1972,13 @@ def minhash_incremental(
         s2 = seen_signatures.select(
             F.col("id").alias("seen_id"), F.col("signature").alias("sig2")
         )
-        est = F.size(
-            F.filter(
-                F.zip_with(F.col("sig1"), F.col("sig2"), lambda x, y: x == y),
-                lambda eq: eq,
-            )
-        ) / F.lit(float(num_hashes))
         out = (
             cands.join(s1, "new_id")
             .join(s2, "seen_id")
-            .withColumn("est_jaccard", F.round(est, 6))
+            .withColumn(
+                "est_jaccard",
+                F.expr(f"round({_agreement_sql('sig1', 'sig2', num_hashes)}, 6)"),
+            )
             .where(F.col("est_jaccard") >= threshold)
             .select("new_id", "seen_id", "est_jaccard")
         )
@@ -2020,75 +2041,26 @@ def stream_minhash_screen(
     table equals the batch :func:`minhash_incremental` pair set
     (pinned by test). Docs with fewer than ``n`` tokens emit nothing —
     the batch contract."""
-    import random
-
-    rnd = random.Random(seed)
-    coeffs = [
-        (rnd.randrange(1, _P), rnd.randrange(0, _P))
-        for _ in range(num_hashes)
-    ]
     rows_per_band = num_hashes // bands
     base = (
         stream.select(
             F.col(id_col).alias("id"),
             tokens(F.lower(F.col(text_col))).alias("toks"),
         )
-        .select(
-            "id",
-            F.transform(
-                F.array_distinct(
-                    shingles_from_tokens(F.col("toks"), n)
-                ),
-                lambda s: F.pmod(_md5_to_long(s), F.lit(_P)),
-            ).alias("xs"),
-        )
+        .select("id", _shingle_digests(F.col("toks"), n).alias("xs"))
         .where(F.size("xs") > 0)
     )
-    sig = base.select(
-        "id",
-        F.array(
-            *[
-                F.array_min(
-                    F.transform(
-                        F.col("xs"),
-                        lambda x: F.pmod(
-                            F.lit(a) * x + F.lit(b), F.lit(_P)
-                        ),
-                    )
-                )
-                for a, b in coeffs
-            ]
-        ).alias("signature"),
+    banded_new = (
+        base.select(
+            F.col("id").alias("new_id"),
+            F.expr(_minhash_row_signature("xs", num_hashes, seed)).alias("sig1"),
+        )
+        .select(
+            "new_id", "sig1",
+            _band_explode("sig1", bands, rows_per_band).alias("bb"),
+        )
+        .select("new_id", "sig1", "bb.band", "bb.bucket")
     )
-    # banding inline (the _band_signatures helper drops the signature
-    # column, which the verification needs on both sides)
-    banded_new = sig.select(
-        F.col("id").alias("new_id"),
-        F.col("signature").alias("sig1"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                F.transform(
-                                    F.slice(
-                                        F.col("signature"),
-                                        bi * rows_per_band + 1,
-                                        rows_per_band,
-                                    ),
-                                    lambda h: h.cast("string"),
-                                ),
-                            )
-                        ).alias("bucket"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("new_id", "sig1", F.col("bb.band"), F.col("bb.bucket"))
     banded_seen = _band_signatures(
         seen_signatures, bands, rows_per_band
     ).join(
@@ -2099,19 +2071,10 @@ def stream_minhash_screen(
     ).select(
         F.col("id").alias("seen_id"), "sig2", "band", "bucket"
     )
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("sig1"), F.col("sig2"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    ) / F.lit(float(num_hashes))
+    est = f"round({_agreement_sql('sig1', 'sig2', num_hashes)}, 6)"
     return (
         banded_new.join(banded_seen, ["band", "bucket"])
-        .select(
-            "new_id",
-            "seen_id",
-            F.round(est, 6).alias("est_jaccard"),
-        )
+        .select("new_id", "seen_id", F.expr(est).alias("est_jaccard"))
         .where(F.col("est_jaccard") >= threshold)
     )
 
@@ -2179,8 +2142,6 @@ def stream_ingest_screen_multimodal(
     archive tables (or cap upstream) when bucket skew is possible.
     The static sides re-aggregate per micro-batch unless the caller
     persists them."""
-    import random
-
     from openeo_processes_dask_spark.training.clustering import (
         _assign_expr,
         _snap_micro,
@@ -2201,85 +2162,45 @@ def stream_ingest_screen_multimodal(
             "stream_ingest_screen_multimodal: every lane is disabled — "
             "pass at least one archive screen table"
         )
-    rnd = random.Random(seed)
-    coeffs = [
-        (rnd.randrange(1, _P), rnd.randrange(0, _P))
-        for _ in range(num_hashes)
-    ]
     rows_per_band = num_hashes // bands
     band_bits = 64 // hash_bands
     mask = (1 << band_bits) - 1
 
     # ---- per-row enrichment: every ENABLED lane's key as a COLUMN
-    # (projection only — the shingle-digest array materializes in its
-    # own select so the md5 chain isn't re-inlined into all num_hashes
-    # lambdas, the repo's measured-pitfalls contract) ----
+    # (projection only). The tokens, the shingle-digest array and the
+    # snapped vector each materialize in their own select, so the split,
+    # the md5 chain and the snap are not re-inlined into every lambda
+    # and distance term that reads them (the repo's measured-pitfalls
+    # contract) ----
+    if seen_signatures is not None:
+        stream = stream.select(
+            "*", tokens(F.lower(F.col(text_col))).alias("__toks__")
+        )
     enrich = [F.col(id_col).alias("id")]
     if seen_fingerprints is not None:
-        enrich.append(
-            F.md5(
-                F.regexp_replace(
-                    F.lower(F.trim(F.col(text_col))), r"\s+", " "
-                )
-            ).alias("__fp__")
-        )
+        enrich.append(doc_fingerprint(F.col(text_col)).alias("__fp__"))
     if seen_signatures is not None:
-        enrich.append(
-            F.transform(
-                F.array_distinct(
-                    shingles_from_tokens(
-                        tokens(F.lower(F.col(text_col))), n
-                    )
-                ),
-                lambda s: F.pmod(_md5_to_long(s), F.lit(_P)),
-            ).alias("__xs__")
-        )
+        enrich.append(_shingle_digests(F.col("__toks__"), n).alias("__xs__"))
     if seen_members is not None:
-        enrich.append(
-            _assign_expr(_snap_micro(vec_col), centroids)
-            .alias("__cluster__")
-        )
+        enrich.append(F.expr(_snap_micro(vec_col)).alias("__sv__"))
         enrich.append(F.col(vec_col).cast("array<double>").alias("__v__"))
     if seen_hashes is not None:
         enrich.append(F.col(sig_col).cast("long").alias("__psig__"))
     cur = stream.select(*enrich)
     if seen_signatures is not None:
+        sig = _minhash_row_signature("__xs__", num_hashes, seed)
         cur = cur.withColumn(
-            "__sig__",
-            F.when(
-                F.size("__xs__") > 0,
-                F.array(
-                    *[
-                        F.array_min(
-                            F.transform(
-                                F.col("__xs__"),
-                                lambda x: F.pmod(
-                                    F.lit(a) * x + F.lit(b), F.lit(_P)
-                                ),
-                            )
-                        )
-                        for a, b in coeffs
-                    ]
-                ),
-            ),
+            "__sig__", F.expr(f"CASE WHEN size(__xs__) > 0 THEN {sig} END")
         ).drop("__xs__")
     key_cols = []
     if seen_signatures is not None:
         key_cols += [
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.slice(
-                            F.col("__sig__"), bi * rows_per_band + 1,
-                            rows_per_band,
-                        ),
-                        lambda h: h.cast("string"),
-                    ),
-                )
-            ).alias(f"__bk{bi}__")
+            F.expr(_band_bucket_sql("__sig__", bi, rows_per_band))
+            .alias(f"__bk{bi}__")
             for bi in range(bands)
         ]
+    if seen_members is not None:
+        key_cols.append(_assign_expr("__sv__", centroids).alias("__cluster__"))
     if seen_hashes is not None:
         key_cols += [
             F.shiftright(F.col("__psig__"), bi * band_bits)
@@ -2324,32 +2245,17 @@ def stream_ingest_screen_multimodal(
                 )
             )
             cur = cur.join(tbl, f"__bk{bi}__", "left")
-        empty_sigs = F.array().cast("array<array<bigint>>")
-        cand_sigs = F.flatten(
-            F.array(
-                *[
-                    F.coalesce(F.col(f"__sigs{bi}__"), empty_sigs)
-                    for bi in range(bands)
-                ]
-            )
+        cand_sigs = ", ".join(
+            f"coalesce(__sigs{bi}__, CAST(array() AS ARRAY<ARRAY<BIGINT>>))"
+            for bi in range(bands)
         )
-        agreement = lambda s2: F.size(  # noqa: E731
-            F.filter(
-                F.zip_with(
-                    F.col("__sig__"), s2, lambda x, y: x == y
-                ),
-                lambda eq: eq,
-            )
-        ) / F.lit(float(num_hashes))
+        agree = _agreement_sql("__sig__", "s2", num_hashes)
         # coalesce(exists, False): a NULL residual (e.g. zero-norm
         # cosine) is a dropped row in the batch lanes' WHERE — no match
-        text_flag = F.col("__sig__").isNotNull() & F.coalesce(
-            F.exists(
-                cand_sigs,
-                lambda s2: F.round(agreement(s2), 6)
-                >= F.lit(text_threshold),
-            ),
-            F.lit(False),
+        text_flag = F.expr(
+            "__sig__ IS NOT NULL AND coalesce(exists("
+            f"flatten(array({cand_sigs})), s2 -> round({agree}, 6) >= "
+            f"{float(text_threshold)!r}D), false)"
         )
 
     if seen_members is not None:
@@ -2539,10 +2445,12 @@ def simhash_near_duplicates(
     # persist: both sides of the banded self-join read the signatures
     sigs = simhash_signatures(df, id_col, text_col).persist()
     try:
-        return _simhash_pairs_body(sigs, max_hamming, bands, max_bucket_size)
+        # materialize the (small) pair set while the signature cache is
+        # alive, then release it — PPJoin unpersist contract
+        return _banded_hamming(
+            sigs, None, max_hamming, bands, "id", "simhash", max_bucket_size
+        ).localCheckpoint(eager=True)
     finally:
-        # release the corpus-sized signature cache after the body
-        # materializes the (small) pair set — PPJoin unpersist contract
         sigs.unpersist()
 
 
@@ -2561,6 +2469,73 @@ def _hamming_band_explode(col_name: str, bands: int, band_bits: int):
         for bi in range(bands)
     )
     return F.expr(f"explode(array({parts}))")
+
+
+def _banded_hamming(
+    sigs: DataFrame,
+    seen: DataFrame | None,
+    max_hamming: int,
+    bands: int,
+    id_col: str,
+    sig_col: str,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """The banded Hamming join behind every 64-bit signature lane: split
+    each signature into ``bands`` chunks, equi-join on (band, chunk),
+    verify with ``bit_count(xor) <= max_hamming``. With ``seen=None``
+    it is the self-join of ``sigs`` (``id1 < id2``, with the
+    ``max_bucket_size`` star cap of :func:`_bucket_cap`), returning
+    (id1, id2, hamming); otherwise strictly ``sigs`` x ``seen``,
+    returning (new_id, seen_id, hamming). Both sides carry their
+    signatures under ``id_col`` / ``sig_col``. Recall is exact when
+    ``bands > max_hamming`` (pigeonhole); callers decide whether they
+    require it. Lazy: nothing is persisted or materialized here."""
+    band_bits = 64 // bands
+    names = ("id1", "id2") if seen is None else ("new_id", "seen_id")
+
+    def project(df: DataFrame) -> DataFrame:
+        return df.selectExpr(
+            f"{_quote(id_col)} AS id",
+            f"CAST({_quote(sig_col)} AS BIGINT) AS sig",
+        )
+
+    def banded(df: DataFrame) -> DataFrame:
+        return df.select(
+            "id", "sig",
+            _hamming_band_explode("sig", bands, band_bits).alias("bb"),
+        ).select("id", "sig", "bb.band", "bb.chunk")
+
+    left = project(sigs)
+    a = banded(left)
+    on = "a.band = b.band AND a.chunk = b.chunk"
+    star = None
+    if seen is None:
+        if max_bucket_size is not None:
+            a, star = _bucket_cap(a, ["band", "chunk"], max_bucket_size)
+        b = a
+        on += " AND a.id < b.id"
+    else:
+        b = banded(project(seen))
+    verified = f"hamming <= {int(max_hamming)}"
+    pairs = (
+        a.alias("a")
+        .join(b.alias("b"), F.expr(on))
+        .selectExpr(
+            f"a.id AS {names[0]}", f"b.id AS {names[1]}",
+            "bit_count(a.sig ^ b.sig) AS hamming",
+        )
+        .distinct()
+        .where(verified)
+    )
+    if star is not None:
+        star_pairs = (
+            star.join(left.selectExpr("id AS id1", "sig AS h1"), "id1")
+            .join(left.selectExpr("id AS id2", "sig AS h2"), "id2")
+            .selectExpr("id1", "id2", "bit_count(h1 ^ h2) AS hamming")
+            .where(verified)
+        )
+        pairs = pairs.unionByName(star_pairs).distinct()
+    return pairs
 
 
 def banded_hamming_incremental(
@@ -2586,35 +2561,8 @@ def banded_hamming_incremental(
             f"bands ({bands}) must exceed max_hamming ({max_hamming}) "
             "for exact recall"
         )
-    band_bits = 64 // bands
-
-    def banded(sigs: DataFrame) -> DataFrame:
-        base = sigs.select(
-            F.col(id_col).alias("id"),
-            F.col(sig_col).cast("long").alias("sig"),
-        )
-        return base.select(
-            "id",
-            "sig",
-            _hamming_band_explode("sig", bands, band_bits).alias("bb"),
-        ).select("id", "sig", F.col("bb.band"), F.col("bb.chunk"))
-
-    a = banded(sigs_new).alias("a")
-    b = banded(sigs_seen).alias("b")
-    hamming = F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk")),
-        )
-        .select(
-            F.col("a.id").alias("new_id"),
-            F.col("b.id").alias("seen_id"),
-            hamming.alias("hamming"),
-        )
-        .distinct()
-        .where(F.col("hamming") <= max_hamming)
+    return _banded_hamming(
+        sigs_new, sigs_seen, max_hamming, bands, id_col, sig_col
     )
 
 
@@ -2643,93 +2591,16 @@ def simhash_incremental(
     implies some band chunk is identical, so with ``max_hamming <
     bands`` recall over new x seen is exactly 1. Returns
     ``(new_id, seen_id, hamming <= max_hamming)``."""
-    band_bits = 64 // bands
     sigs_new = simhash_signatures(df_new, id_col, text_col).persist()
-
-    def banded(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "id",
-            "simhash",
-            _hamming_band_explode("simhash", bands, band_bits).alias("bb"),
-        ).select("id", "simhash", F.col("bb.band"), F.col("bb.chunk"))
-
     try:
-        a = banded(sigs_new).alias("a")
-        b = banded(seen_signatures).alias("b")
-        xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-        out = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.chunk") == F.col("b.chunk")),
-            )
-            .select(
-                F.col("a.id").alias("new_id"),
-                F.col("b.id").alias("seen_id"),
-                F.bit_count(xor).alias("hamming"),
-            )
-            .distinct()
-            .where(F.col("hamming") <= max_hamming)
-        )
         # release the batch-sized signature cache after materializing
         # the (small) match set — PPJoin unpersist contract (ADVICE
         # r7); seen_signatures is caller-owned and untouched
-        return out.localCheckpoint(eager=True)
+        return _banded_hamming(
+            sigs_new, seen_signatures, max_hamming, bands, "id", "simhash"
+        ).localCheckpoint(eager=True)
     finally:
         sigs_new.unpersist()
-
-
-def _simhash_pairs_body(
-    sigs: DataFrame,
-    max_hamming: int,
-    bands: int,
-    max_bucket_size: int | None,
-) -> DataFrame:
-    band_bits = 64 // bands
-    banded = sigs.select(
-        "id",
-        "simhash",
-        _hamming_band_explode("simhash", bands, band_bits).alias("bb"),
-    ).select("id", "simhash", F.col("bb.band"), F.col("bb.chunk"))
-    star = None
-    if max_bucket_size is not None:
-        banded, star = _bucket_cap(banded, ["band", "chunk"], max_bucket_size)
-    a, b = banded.alias("a"), banded.alias("b")
-    xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    hamming = F.bit_count(xor)
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id1"),
-            F.col("b.id").alias("id2"),
-            hamming.alias("hamming"),
-        )
-        .distinct()
-        .where(F.col("hamming") <= max_hamming)
-    )
-    if star is not None:
-        s1 = sigs.select(F.col("id").alias("id1"), F.col("simhash").alias("h1"))
-        s2 = sigs.select(F.col("id").alias("id2"), F.col("simhash").alias("h2"))
-        star_pairs = (
-            star.join(s1, "id1")
-            .join(s2, "id2")
-            .select(
-                "id1", "id2",
-                F.bit_count(
-                    F.col("h1").bitwiseXOR(F.col("h2"))
-                ).alias("hamming"),
-            )
-            .where(F.col("hamming") <= max_hamming)
-        )
-        pairs = pairs.unionByName(star_pairs).distinct()
-    # materialize the (small) pair set while the signature cache the
-    # caller holds is alive — the caller unpersists on return
-    return pairs.localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3216,51 +3087,9 @@ def banded_hamming_pairs(
             f"bands ({bands}) must exceed max_hamming ({max_hamming}) "
             "for exact recall"
         )
-    band_bits = 64 // bands
-    sigs = sigs.select(
-        F.col(id_col).alias("id"), F.col(sig_col).cast("long").alias("sig")
+    return _banded_hamming(
+        sigs, None, max_hamming, bands, id_col, sig_col, max_bucket_size
     )
-    banded = sigs.select(
-        "id",
-        "sig",
-        _hamming_band_explode("sig", bands, band_bits).alias("bb"),
-    ).select("id", "sig", F.col("bb.band"), F.col("bb.chunk"))
-    star = None
-    if max_bucket_size is not None:
-        banded, star = _bucket_cap(banded, ["band", "chunk"], max_bucket_size)
-    a, b = banded.alias("a"), banded.alias("b")
-    hamming = F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id1"),
-            F.col("b.id").alias("id2"),
-            hamming.alias("hamming"),
-        )
-        .distinct()
-        .where(F.col("hamming") <= max_hamming)
-    )
-    if star is not None:
-        s1 = sigs.select(F.col("id").alias("id1"), F.col("sig").alias("h1"))
-        s2 = sigs.select(F.col("id").alias("id2"), F.col("sig").alias("h2"))
-        star_pairs = (
-            star.join(s1, "id1")
-            .join(s2, "id2")
-            .select(
-                "id1", "id2",
-                F.bit_count(
-                    F.col("h1").bitwiseXOR(F.col("h2"))
-                ).alias("hamming"),
-            )
-            .where(F.col("hamming") <= max_hamming)
-        )
-        pairs = pairs.unionByName(star_pairs).distinct()
-    return pairs
 
 
 def dedup_pair_recall(

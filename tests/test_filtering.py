@@ -252,6 +252,8 @@ def test_plan_shapes_of_new_operators(spark, tmp_path):
 
 
 def test_minhash_incremental_new_vs_seen_only(spark):
+    from pyspark.sql.types import DoubleType
+
     from openeo_processes_dask_spark.training.dedup import (
         minhash_incremental,
         minhash_signatures,
@@ -278,6 +280,7 @@ def test_minhash_incremental_new_vs_seen_only(spark):
     sigs = minhash_signatures(seen, "doc_id", "text", n=3, num_hashes=64)
     out = minhash_incremental(new, sigs, n=3, num_hashes=64, bands=16,
                               threshold=0.3)
+    assert out.schema["est_jaccard"].dataType == DoubleType()
     rows = out.collect()
     pairs = {(r["new_id"], r["seen_id"]) for r in rows}
     assert (10, 1) in pairs

@@ -735,6 +735,8 @@ def test_stream_minhash_screen_matches_batch(spark, tmp_path):
     (per-row HOF signatures, band join vs static archive signatures,
     two micro-batches) equals the batch minhash_incremental pair set —
     pairs AND est values."""
+    from pyspark.sql.types import DoubleType
+
     from openeo_processes_dask_spark.training.dedup import (
         minhash_incremental,
         minhash_signatures,
@@ -769,6 +771,7 @@ def test_stream_minhash_screen_matches_batch(spark, tmp_path):
         .parquet(d)
     )
     out = stream_minhash_screen(stream, sigs, threshold=0.5)
+    assert out.schema["est_jaccard"].dataType == DoubleType()
     q = (
         out.writeStream.format("memory")
         .queryName("smh_pin")
@@ -781,11 +784,11 @@ def test_stream_minhash_screen_matches_batch(spark, tmp_path):
         (r["new_id"], r["seen_id"], r["est_jaccard"])
         for r in spark.table("smh_pin").collect()
     }
+    batch = minhash_incremental(new, sigs, threshold=0.5)
+    assert batch.schema["est_jaccard"].dataType == DoubleType()
     exp = {
         (r["new_id"], r["seen_id"], r["est_jaccard"])
-        for r in minhash_incremental(
-            new, sigs, threshold=0.5
-        ).collect()
+        for r in batch.collect()
     }
     assert got == exp
     assert {p[0] for p in got} == {101, 103}
