@@ -78,6 +78,21 @@ CHANGED = [
     "simhash_incremental",
     "image_near_dups",
     "image_near_dups_incremental",
+    # each sketch has one per-group body; the global sketches, the stream
+    # twins and the quantile merges run it with no group columns, and
+    # harmonic centrality takes its HLL hash from the sketch module
+    "count_min_words",
+    "count_min_by_source",
+    "hll_registers",
+    "distinct_tokens_by_source",
+    "corpus_overlap",
+    "quantile_sketch_grouped",
+    "quantile_sketch_grouped_merged",
+    "source_token_profile",
+    "streaming_count_min",
+    "streaming_hll",
+    "streaming_quantile_sketch",
+    "harmonic",
 ]
 
 _REPO = os.path.dirname(

@@ -2164,7 +2164,6 @@ def stream_ingest_screen_multimodal(
         )
     rows_per_band = num_hashes // bands
     band_bits = 64 // hash_bands
-    mask = (1 << band_bits) - 1
 
     # ---- per-row enrichment: every ENABLED lane's key as a COLUMN
     # (projection only). The tokens, the shingle-digest array and the
@@ -2203,9 +2202,9 @@ def stream_ingest_screen_multimodal(
         key_cols.append(_assign_expr("__sv__", centroids).alias("__cluster__"))
     if seen_hashes is not None:
         key_cols += [
-            F.shiftright(F.col("__psig__"), bi * band_bits)
-            .bitwiseAND(F.lit(mask))
-            .alias(f"__ck{bi}__")
+            F.expr(
+                f"{_hamming_chunk_sql('__psig__', bi, band_bits)} AS __ck{bi}__"
+            )
             for bi in range(hash_bands)
         ]
     if key_cols:
@@ -2237,14 +2236,13 @@ def stream_ingest_screen_multimodal(
             .groupBy("band", "bucket")
             .agg(F.collect_list("s2").alias("sigs"))
         )
+        # per band, built from SQL strings: the same table from Column
+        # objects costs ~4x the py4j round trips
         for bi in range(bands):
-            tbl = F.broadcast(
-                sig_buckets.where(F.col("band") == bi).select(
-                    F.col("bucket").alias(f"__bk{bi}__"),
-                    F.col("sigs").alias(f"__sigs{bi}__"),
-                )
+            tbl = sig_buckets.where(f"band = {bi}").selectExpr(
+                f"bucket AS __bk{bi}__", f"sigs AS __sigs{bi}__"
             )
-            cur = cur.join(tbl, f"__bk{bi}__", "left")
+            cur = cur.join(F.broadcast(tbl), f"__bk{bi}__", "left")
         cand_sigs = ", ".join(
             f"coalesce(__sigs{bi}__, CAST(array() AS ARRAY<ARRAY<BIGINT>>))"
             for bi in range(bands)
@@ -2292,47 +2290,27 @@ def stream_ingest_screen_multimodal(
         )
 
     if seen_hashes is not None:
-        chunk_tables = (
-            seen_hashes.select(
-                F.col(sig_col).cast("long").alias("s2")
-            )
-            .select(
-                "s2",
-                *[
-                    F.shiftright(F.col("s2"), bi * band_bits)
-                    .bitwiseAND(F.lit(mask))
-                    .alias(f"__ck{bi}__")
-                    for bi in range(hash_bands)
-                ],
-            )
+        chunk_tables = seen_hashes.selectExpr(
+            f"CAST({_quote(sig_col)} AS BIGINT) AS s2"
+        ).selectExpr(
+            "s2",
+            *[
+                f"{_hamming_chunk_sql('s2', bi, band_bits)} AS __ck{bi}__"
+                for bi in range(hash_bands)
+            ],
         )
         for bi in range(hash_bands):
-            tbl = F.broadcast(
-                chunk_tables.groupBy(f"__ck{bi}__").agg(
-                    F.collect_list("s2").alias(f"__hs{bi}__")
-                )
+            tbl = chunk_tables.groupBy(f"__ck{bi}__").agg(
+                F.expr(f"collect_list(s2) AS __hs{bi}__")
             )
-            cur = cur.join(tbl, f"__ck{bi}__", "left")
-        cand_hashes = F.flatten(
-            F.array(
-                *[
-                    F.coalesce(
-                        F.col(f"__hs{bi}__"),
-                        F.array().cast("array<bigint>"),
-                    )
-                    for bi in range(hash_bands)
-                ]
-            )
+            cur = cur.join(F.broadcast(tbl), f"__ck{bi}__", "left")
+        cand_hashes = ", ".join(
+            f"coalesce(__hs{bi}__, CAST(array() AS ARRAY<BIGINT>))"
+            for bi in range(hash_bands)
         )
-        perc_flag = F.coalesce(
-            F.exists(
-                cand_hashes,
-                lambda s2: F.bit_count(
-                    F.col("__psig__").bitwiseXOR(s2)
-                )
-                <= F.lit(max_hamming),
-            ),
-            F.lit(False),
+        perc_flag = F.expr(
+            f"coalesce(exists(flatten(array({cand_hashes})), s2 -> "
+            f"bit_count(__psig__ ^ s2) <= {int(max_hamming)}), false)"
         )
 
     enabled_flags = [
@@ -2461,14 +2439,18 @@ def _hamming_band_explode(col_name: str, bands: int, band_bits: int):
     struct/shiftright/bitwiseAND construction costs ~5 py4j round-trips
     per band (~0.2 s per banded side at 8 bands). Identical expression
     tree, identical results."""
-    mask = (1 << band_bits) - 1
     parts = ",".join(
         f"struct({bi} AS band, "
-        f"shiftright(`{col_name}`, {bi * band_bits}) & {mask} "
-        "AS chunk)"
+        f"{_hamming_chunk_sql(_quote(col_name), bi, band_bits)} AS chunk)"
         for bi in range(bands)
     )
     return F.expr(f"explode(array({parts}))")
+
+
+def _hamming_chunk_sql(sig: str, bi: int, band_bits: int) -> str:
+    """SQL: chunk ``bi`` (``band_bits`` wide) of the 64-bit signature
+    expression ``sig``."""
+    return f"shiftright({sig}, {bi * band_bits}) & {(1 << band_bits) - 1}"
 
 
 def _banded_hamming(

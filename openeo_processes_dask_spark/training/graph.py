@@ -17,6 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from openeo_processes_dask_spark.training.sketches import (
+    _hll_alpha,
+    _hll_bucket_rho,
+)
+
 #: total rank mass in integer units; 1e12 keeps per-node ranks well above
 #: the floor-division granularity for any realistic node count while the
 #: damped sums stay far inside int64 (85 * 1e12 << 2^63)
@@ -278,12 +283,9 @@ def harmonic_centrality(
     if not 4 <= p <= 12:
         raise ValueError(f"p must be in [4, 12], got {p}")
     m = 1 << p
-    bits = 60 - p
-    shift_base = bits + 1  # rho in [1, bits+1] -> exponent >= 0
+    shift_base = 60 - p + 1  # rho in [1, 61-p] -> exponent >= 0
     two_pow = float(1 << shift_base)
-    alpha = {16: 0.673, 32: 0.697, 64: 0.709}.get(
-        m, 0.7213 / (1 + 1.079 / m)
-    )
+    alpha = _hll_alpha(m)
     e = (
         edges.select(
             F.col(src_col).cast("long").alias("src"),
@@ -302,26 +304,12 @@ def harmonic_centrality(
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("hll-"), F.col("node").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
-    rest = F.shiftright(h, p)
-    rho = (
-        F.when(
-            rest > 0,
-            F.lit(bits) - F.floor(F.log2(rest.cast("double"))).cast("int"),
-        )
-        .otherwise(F.lit(bits + 1))
-        .cast("int")
-    )
-    regs = nodes.select(
-        "node", (h % F.lit(m)).cast("int").alias("bucket"), rho.alias("rho")
-    )
+    bucket, rho = _hll_bucket_rho("node", p)
+    regs = nodes.select("node", bucket.alias("bucket"), rho.alias("rho"))
 
+    # Not sketches.hyperloglog_estimate_grouped (a rounded DECIMAL-sum
+    # estimate): this one sums in int64 and stays unrounded until the
+    # harmonic sum, the form the `harmonic` oracle replays.
     def estimate(r: DataFrame, name: str) -> DataFrame:
         g = r.groupBy("node").agg(
             F.count(F.lit(1)).cast("long").alias("cnt"),
