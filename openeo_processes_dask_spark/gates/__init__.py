@@ -93,6 +93,14 @@ CHANGED = [
     "streaming_hll",
     "streaming_quantile_sketch",
     "harmonic",
+    # the distinct word-shingle digest relation comes from one builder,
+    # and batch decontamination is the per-id count of its stream twin
+    "ngram_jaccard",
+    "jaccard_prefix",
+    "decontaminate",
+    "contamination_ratio",
+    "contamination_attribution",
+    "streaming_contamination_screen",
 ]
 
 _REPO = os.path.dirname(

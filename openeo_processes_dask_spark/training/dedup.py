@@ -2,9 +2,11 @@
 SimHash.
 
 Every lane of one hash family shares its definitions: the whole-document
-fingerprint is ``textanalysis.doc_fingerprint``; the MinHash coefficients,
-band buckets, signature-agreement estimate and per-row stream signature
-are one SQL fragment each (``_minhash_coeffs`` .. ``_agreement_sql``);
+fingerprint is ``textanalysis.doc_fingerprint``; the distinct word-shingle
+digest relation of the Jaccard, MinHash and decontamination lanes is
+``_shingle_keys``; the MinHash coefficients, band buckets,
+signature-agreement estimate and per-row stream signature are one SQL
+fragment each (``_minhash_coeffs`` .. ``_agreement_sql``);
 every 64-bit-signature lane (SimHash, perceptual hashes) runs the one
 banded Hamming join ``_banded_hamming``.
 
@@ -97,6 +99,32 @@ def _spread(df: DataFrame, key: str | None = None) -> DataFrame:
             return df.repartition(target, F.col(key))
         return df.repartition(target)
     return df
+
+
+def _shingle_keys(
+    df: DataFrame, id_col: str, text_col: str, n: int, key: str | None = None
+) -> DataFrame:
+    """``(id, shk)``: one row per DISTINCT word-``n``-gram of each
+    document, keyed by its 60-bit md5 digest — the shingle relation every
+    n-gram lane joins on (Jaccard, MinHash, decontamination). ``key``
+    goes to :func:`_spread`. The explode is narrow, so the relation
+    composes onto a stream unchanged. Tokens materialize in their own
+    select first (the ``shingles_from_tokens`` perf contract)."""
+    return (
+        _spread(
+            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t__")),
+            key=key,
+        )
+        .select("id", tokens(F.lower(F.col("__t__"))).alias("toks"))
+        .select(
+            "id",
+            F.explode(
+                F.array_distinct(shingles_from_tokens(F.col("toks"), n))
+            ).alias("sh"),
+        )
+        # hash the shingle so the shuffle key is 8 bytes, not the n-gram text
+        .select("id", _md5_to_long(F.col("sh")).alias("shk"))
+    )
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -424,25 +452,12 @@ def ngram_jaccard_pairs(
     Jaccard (computed over the filtered shingle sets) — that's the standard,
     documented trade (same move as TF-IDF stopword cuts).
     """
-    # tokens materialized first — see shingles_from_tokens perf contract
-    sh = (
-        _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t__")))
-        .select("id", tokens(F.lower(F.col("__t__"))).alias("toks"))
-        .select(
-            "id",
-            F.explode(
-                F.array_distinct(shingles_from_tokens(F.col("toks"), n))
-            ).alias("sh"),
-        )
-        # hash the shingle so the shuffle key is 8 bytes, not the n-gram text
-        .select("id", _md5_to_long(F.col("sh")).alias("shk"))
-        # persist: this 16-byte-per-row table feeds the size aggregate AND
-        # both sides of the self-join; without it the tokenize+explode+md5
-        # pipeline recomputes 3× (verified: ReusedExchange never matches
-        # the aliased join sides). At cluster scale this is the "write the
-        # shingle table first" step of every published dedup pipeline.
-        .persist()
-    )
+    # persist: this 16-byte-per-row table feeds the size aggregate AND
+    # both sides of the self-join; without it the tokenize+explode+md5
+    # pipeline recomputes 3× (verified: ReusedExchange never matches
+    # the aliased join sides). At cluster scale this is the "write the
+    # shingle table first" step of every published dedup pipeline.
+    sh = _shingle_keys(df, id_col, text_col, n).persist()
     try:
         keyed = sh
         if max_doc_freq is not None:
@@ -534,24 +549,10 @@ def jaccard_prefix_pairs(
     re-count aggregate). Text never shuffles — only 8-byte shingle
     keys, ids, and one array-of-keys row per document.
     """
-    sh = (
-        # keyed spread (r13): sizes/arrs/prefix-window downstream are all
-        # keyed by id — hash-partitioning here lets them reuse this
-        # exchange instead of re-shuffling (guide §2.4)
-        _spread(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t__")),
-            key="id",
-        )
-        .select("id", tokens(F.lower(F.col("__t__"))).alias("toks"))
-        .select(
-            "id",
-            F.explode(
-                F.array_distinct(shingles_from_tokens(F.col("toks"), n))
-            ).alias("sh"),
-        )
-        .select("id", _md5_to_long(F.col("sh")).alias("shk"))
-        .persist()
-    )
+    # keyed spread (r13): sizes/arrs/prefix-window downstream are all
+    # keyed by id — hash-partitioning here lets them reuse this
+    # exchange instead of re-shuffling (guide §2.4)
+    sh = _shingle_keys(df, id_col, text_col, n, key="id").persist()
     try:
         return _jaccard_prefix_pairs_body(sh, threshold)
     finally:
@@ -1110,28 +1111,23 @@ def decontaminate(
     pipeline anti-joins away. n_shared = number of distinct offending
     shingles in the document.
 
-    Plan: benchmark shingles reduce to DISTINCT digests (the benchmark is
-    eval-sized — thousands of rows — so its digest set broadcasts); the
-    corpus side explodes distinct shingle digests once and inner-joins.
-    The join is digest-on-digest: document text never shuffles. At 100 TB
-    the corpus side is a scan + explode + broadcast-hash-join — no
-    exchange at all (AQE broadcasts the benchmark side)."""
-    bench_keys = benchmark_digests(benchmark, bench_text_col, n)
-    doc_sh = (
-        _spread(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t__"))
-        )
-        .select("id", tokens(F.lower(F.col("__t__"))).alias("toks"))
-        .select(
-            "id",
-            F.explode(
-                F.array_distinct(shingles_from_tokens(F.col("toks"), n))
-            ).alias("sh"),
-        )
-        .select("id", _md5_to_long(F.col("sh")).alias("shk"))
-    )
+    The batch lane IS the fold of its stream twin: the ``(id, shk)`` hits
+    of :func:`stream_contamination_screen` against
+    :func:`benchmark_digests`, counted per id. Benchmark shingles reduce
+    to DISTINCT digests (the benchmark is eval-sized — thousands of rows
+    — so its digest set broadcasts); the corpus side explodes distinct
+    shingle digests once and inner-joins. The join is digest-on-digest:
+    document text never shuffles. At 100 TB the corpus side is a scan +
+    explode + broadcast-hash-join — no exchange until the per-id count
+    (AQE broadcasts the benchmark side)."""
     return (
-        doc_sh.join(F.broadcast(bench_keys), "shk")
+        stream_contamination_screen(
+            df,
+            benchmark_digests(benchmark, bench_text_col, n),
+            id_col,
+            text_col,
+            n,
+        )
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
@@ -1243,37 +1239,12 @@ def contamination_attribution(
     :func:`shared_key_incremental` (new = training corpus, seen =
     benchmark). Same 100 TB shape as decontaminate — digests join,
     text never shuffles, benchmark side broadcast-sized."""
-    doc_sh = (
-        _spread(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t__"))
-        )
-        .select("id", tokens(F.lower(F.col("__t__"))).alias("toks"))
-        .select(
-            "id",
-            F.explode(
-                F.array_distinct(shingles_from_tokens(F.col("toks"), n))
-            ).alias("sh"),
-        )
-        .select("id", _md5_to_long(F.col("sh")).alias("shk"))
-    )
-    bench_sh = (
-        _spread(
-            benchmark.select(
-                F.col(bench_id_col).alias("id"),
-                F.col(bench_text_col).alias("__t__"),
-            )
-        )
-        .select("id", tokens(F.lower(F.col("__t__"))).alias("toks"))
-        .select(
-            "id",
-            F.explode(
-                F.array_distinct(shingles_from_tokens(F.col("toks"), n))
-            ).alias("sh"),
-        )
-        .select("id", _md5_to_long(F.col("sh")).alias("shk"))
-    )
     return shared_key_incremental(
-        doc_sh, bench_sh, id_col="id", key_col="shk", min_shared=1
+        _shingle_keys(df, id_col, text_col, n),
+        _shingle_keys(benchmark, bench_id_col, bench_text_col, n),
+        id_col="id",
+        key_col="shk",
+        min_shared=1,
     ).select(
         F.col("new_id").alias("id"),
         F.col("seen_id").alias("bench_id"),
@@ -1288,10 +1259,11 @@ def benchmark_digests(
 ) -> DataFrame:
     """Distinct word-``n``-gram shingle digests of an evaluation set —
     the static relation BOTH decontamination lanes join against:
-    :func:`decontaminate` builds it inline; a continuous-ingest pipeline
-    PERSISTS it once (it is eval-sized and changes only when the
-    benchmark suite does) and hands the loaded table to
-    :func:`stream_contamination_screen`. One column ``shk`` (the
+    :func:`decontaminate` and :func:`contamination_ratio` build it per
+    call; a continuous-ingest pipeline PERSISTS it once (it is
+    eval-sized and changes only when the benchmark suite does) and hands
+    the loaded table to :func:`stream_contamination_screen`. One column
+    ``shk`` (the
     md5-derived 60-bit digest; text never leaves this builder)."""
     return (
         _spread(benchmark.select(F.col(text_col).alias("__t__")))
@@ -1315,36 +1287,27 @@ def stream_contamination_screen(
 ) -> DataFrame:
     """Streaming twin of :func:`decontaminate` (the GPT-3 appendix-C
     hygiene step applied ONLINE as documents land): completely STATELESS
-    — per-row DISTINCT shingle-digest array built with higher-order
-    functions (no stateful aggregate), exploded, then inner
+    — the shared ``(id, shk)`` shingle relation (:func:`_shingle_keys`,
+    a narrow per-row explode, no stateful aggregate) inner
     stream-static joined against the persisted benchmark digest table
     (``bench_keys`` from :func:`benchmark_digests` — eval-sized, so the
-    per-micro-batch join broadcasts).
+    per-micro-batch join broadcasts). The same body runs on a batch
+    frame: :func:`decontaminate` is its per-id count.
 
     Emits one ``(id, shk)`` row per offending distinct shingle; rows
-    within a document are unique by construction (the array is
-    distinct), so ``SELECT id, count(*) FROM drained GROUP BY id``
-    equals the batch :func:`decontaminate` ``(id, n_shared)``
+    within a document are unique by construction (the shingles are
+    distinct per document), so ``SELECT id, count(*) FROM drained GROUP
+    BY id`` equals the batch :func:`decontaminate` ``(id, n_shared)``
     bit-for-bit (pinned by test) — the same landed-table aggregation
     convention as ``stream_minhash_screen``. Documents sharing nothing
     emit nothing; docs with fewer than ``n`` tokens emit nothing (the
     batch contract). Zero watermark, zero state store: safe at any
     ingest rate."""
-    base = stream.select(
-        F.col(id_col).alias("id"),
-        tokens(F.lower(F.col(text_col))).alias("toks"),
-    ).select(
-        "id",
-        F.explode(
-            F.transform(
-                F.array_distinct(
-                    shingles_from_tokens(F.col("toks"), n)
-                ),
-                _md5_to_long,
-            )
-        ).alias("shk"),
+    return (
+        _shingle_keys(stream, id_col, text_col, n)
+        .join(F.broadcast(bench_keys), "shk")
+        .select("id", "shk")
     )
-    return base.join(F.broadcast(bench_keys), "shk").select("id", "shk")
 
 
 def shared_key_incremental(
@@ -1511,24 +1474,13 @@ def minhash_signatures(
     SLOWER: Catalyst's project-collapsing inlines the md5 digest chain
     into every outer lambda and nested HOFs evaluate interpreted, outside
     codegen. Coefficients are seeded literals so runs are reproducible."""
-    sh = (
-        # keyed spread (r13): the 64-min aggregate below groups by id, so
-        # hash-partitioning by id makes it ONE Complete aggregate reusing
-        # this exchange — no partial/final split, no second exchange, and
-        # no round-robin sort-before-repartition. Measured at sf0.1:
-        # 1.57 s -> 1.07 s for the identical signature table (guide §2.4).
-        _spread(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t__")),
-            key="id",
-        )
-        .select("id", tokens(F.lower(F.col("__t__"))).alias("toks"))
-        .select(
-            "id",
-            F.explode(
-                F.array_distinct(shingles_from_tokens(F.col("toks"), n))
-            ).alias("sh"),
-        )
-        .select("id", F.pmod(_md5_to_long(F.col("sh")), F.lit(_P)).alias("x"))
+    # keyed spread (r13): the 64-min aggregate below groups by id, so
+    # hash-partitioning by id makes it ONE Complete aggregate reusing
+    # this exchange — no partial/final split, no second exchange, and
+    # no round-robin sort-before-repartition. Measured at sf0.1:
+    # 1.57 s -> 1.07 s for the identical signature table (guide §2.4).
+    sh = _shingle_keys(df, id_col, text_col, n, key="id").select(
+        "id", F.pmod(F.col("shk"), F.lit(_P)).alias("x")
     )
     hash_cols, sig_array = _minhash_hash_cols(num_hashes, seed)
     agg = sh.groupBy("id").agg(*hash_cols)
@@ -2146,7 +2098,10 @@ def stream_ingest_screen_multimodal(
         _assign_expr,
         _snap_micro,
     )
-    from openeo_processes_dask_spark.training.similarity import _norm
+    from openeo_processes_dask_spark.training.similarity import (
+        _cos6_sql,
+        _norm_sql,
+    )
 
     if (seen_members is None) != (centroids is None):
         raise ValueError(
@@ -2199,7 +2154,10 @@ def stream_ingest_screen_multimodal(
             for bi in range(bands)
         ]
     if seen_members is not None:
-        key_cols.append(_assign_expr("__sv__", centroids).alias("__cluster__"))
+        key_cols += [
+            _assign_expr("__sv__", centroids).alias("__cluster__"),
+            F.expr(f"{_norm_sql('__v__')} AS __nv__"),
+        ]
     if seen_hashes is not None:
         key_cols += [
             F.expr(
@@ -2267,26 +2225,13 @@ def stream_ingest_screen_multimodal(
             )
         )
         cur = cur.join(members, "__cluster__", "left")
-        dot = lambda v2: F.aggregate(  # noqa: E731
-            F.zip_with(F.col("__v__"), v2, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sem_flag = F.coalesce(
-            F.exists(
-                F.coalesce(
-                    F.col("__vs__"),
-                    F.array().cast("array<array<double>>"),
-                ),
-                lambda v2: F.round(
-                    F.try_divide(
-                        dot(v2), _norm(F.col("__v__")) * _norm(v2)
-                    ),
-                    6,
-                )
-                >= F.lit(sem_threshold),
-            ),
-            F.lit(False),
+        # ||__v__|| is the projected __nv__, once per row; only the
+        # candidate's norm is folded per candidate
+        cos6 = _cos6_sql("__v__", "v2", "__nv__", _norm_sql("v2"))
+        sem_flag = F.expr(
+            "coalesce(exists(coalesce(__vs__, "
+            "CAST(array() AS ARRAY<ARRAY<DOUBLE>>)), "
+            f"v2 -> {cos6} >= {float(sem_threshold)!r}D), false)"
         )
 
     if seen_hashes is not None:
@@ -2879,33 +2824,12 @@ def contamination_ratio(
     broadcasts, corpus side is scan + explode + broadcast LEFT join +
     one hash aggregate); text never shuffles.
     """
-    bench_keys = (
-        _spread(benchmark.select(F.col(bench_text_col).alias("__t__")))
-        .select(tokens(F.lower(F.col("__t__"))).alias("toks"))
-        .select(
-            F.explode(
-                F.array_distinct(shingles_from_tokens(F.col("toks"), n))
-            ).alias("sh")
-        )
-        .select(_md5_to_long(F.col("sh")).alias("shk"))
-        .distinct()
-        .withColumn("__hit", F.lit(1))
-    )
-    doc_sh = (
-        _spread(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t__"))
-        )
-        .select("id", tokens(F.lower(F.col("__t__"))).alias("toks"))
-        .select(
-            "id",
-            F.explode(
-                F.array_distinct(shingles_from_tokens(F.col("toks"), n))
-            ).alias("sh"),
-        )
-        .select("id", _md5_to_long(F.col("sh")).alias("shk"))
+    bench_keys = benchmark_digests(benchmark, bench_text_col, n).withColumn(
+        "__hit", F.lit(1)
     )
     scored = (
-        doc_sh.join(F.broadcast(bench_keys), "shk", "left")
+        _shingle_keys(df, id_col, text_col, n)
+        .join(F.broadcast(bench_keys), "shk", "left")
         .groupBy("id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),

@@ -40,6 +40,26 @@ def _norm(vec_col):
     )
 
 
+def _norm_sql(v: str) -> str:
+    """SQL: the L2 norm of embedding column ``v`` — the same fold as
+    :func:`_norm`, parsed on the server at a constant py4j cost."""
+    return (
+        f"sqrt(aggregate(CAST({v} AS ARRAY<DOUBLE>), 0D, "
+        "(acc, x) -> acc + x * x))"
+    )
+
+
+def _cos6_sql(v1: str, v2: str, n1: str, n2: str) -> str:
+    """SQL: the SemDeDup cosine of ``v1`` and ``v2`` rounded to 6
+    decimals, over their precomputed norms ``n1`` and ``n2`` (NULL on a
+    zero norm). Every SemDeDup lane, batch and stream, compares this."""
+    return (
+        f"round(try_divide(aggregate(zip_with(CAST({v1} AS ARRAY<DOUBLE>), "
+        f"CAST({v2} AS ARRAY<DOUBLE>), (x, y) -> x * y), 0D, "
+        f"(acc, x) -> acc + x), {n1} * {n2}), 6)"
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     query: Sequence[float],
@@ -709,6 +729,7 @@ def semdedup_pairs(
     generation against brute-force cosine truth. Plan notes on
     :func:`semdedup`."""
     from openeo_processes_dask_spark.training.clustering import (
+        _quote,
         kmeans_assign,
         kmeans_fit,
     )
@@ -733,7 +754,7 @@ def semdedup_pairs(
         df, cents, id_col=id_col, vec_col=vec_col, keep_vec=True
     ).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-        _norm(F.col(vec_col)).alias("nrm"), "cluster",
+        F.expr(_norm_sql(_quote(vec_col))).alias("nrm"), "cluster",
     )
     star = None
     if max_cluster_pairs_per_vector is not None:
@@ -758,7 +779,7 @@ def semdedup_pairs(
     if star is not None:
         vecs = df.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-            _norm(F.col(vec_col)).alias("nrm"),
+            F.expr(_norm_sql(_quote(vec_col))).alias("nrm"),
         )
         cands = cands.unionByName(
             star.join(
@@ -775,18 +796,9 @@ def semdedup_pairs(
                 "id2",
             ).select("id1", "v1", "n1", "id2", "v2", "n2")
         ).dropDuplicates(["id1", "id2"])
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("v1").cast("array<double>"),
-            F.col("v2").cast("array<double>"),
-            lambda x, y: x * y,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = F.try_divide(dot, F.col("n1") * F.col("n2"))
+    cos6 = F.expr(_cos6_sql("v1", "v2", "n1", "n2"))
     return cands.select(
-        "id1", "id2", F.round(cos, 6).alias("cosine")
+        "id1", "id2", cos6.alias("cosine")
     ).where(F.col("cosine") >= threshold)
 
 
@@ -888,10 +900,7 @@ def semdedup_incremental_pairs(
     # Same expression over the same data: values bit-identical. The
     # norm and cosine trees are SQL strings parsed on the server, a
     # constant few py4j round trips each.
-    n_v = F.expr(
-        "sqrt(aggregate(CAST(v AS ARRAY<DOUBLE>), 0D, "
-        "(acc, x) -> acc + x * x))"
-    )
+    n_v = F.expr(_norm_sql("v"))
     seen = seen_members.select(
         F.col("id").alias("seen_id"), F.col("v").alias("v2"),
         n_v.alias("n2"), "cluster",
@@ -904,11 +913,7 @@ def semdedup_incremental_pairs(
         .join(seen, "cluster")
         .select("new_id", "v1", "n1", "seen_id", "v2", "n2")
     )
-    cos6 = F.expr(
-        "round(try_divide(aggregate(zip_with(CAST(v1 AS ARRAY<DOUBLE>), "
-        "CAST(v2 AS ARRAY<DOUBLE>), (x, y) -> x * y), 0D, "
-        "(acc, x) -> acc + x), n1 * n2), 6)"
-    )
+    cos6 = F.expr(_cos6_sql("v1", "v2", "n1", "n2"))
     return cands.select(
         "new_id", "seen_id", cos6.alias("cosine")
     ).where(F.col("cosine") >= threshold)
@@ -1002,33 +1007,22 @@ def stream_semdedup_incremental(
     # stream==batch pin is unchanged.
     new_tagged = (
         _tag_members(stream, centroids, id_col, vec_col)
-        .withColumn("__nn__", _norm(F.col("v")))
+        .withColumn("__nn__", F.expr(_norm_sql("v")))
         .alias("n")
     )
     seen = F.broadcast(
         seen_members.select(
-            F.col("v").alias("v2"), _norm(F.col("v")).alias("__sn__"),
+            F.col("v").alias("v2"), F.expr(_norm_sql("v")).alias("__sn__"),
             F.col("cluster").alias("c2"),
         )
     ).alias("s")
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("n.v").cast("array<double>"),
-            F.col("s.v2").cast("array<double>"),
-            lambda x, y: x * y,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = F.try_divide(dot, F.col("n.__nn__") * F.col("s.__sn__"))
+    cos6 = F.expr(_cos6_sql("n.v", "s.v2", "n.__nn__", "s.__sn__"))
     # semi/anti joins keep the operator STATELESS in append mode (a
     # streaming groupBy would be a stateful aggregate needing a
     # watermark): hash equi-join on the cluster id with the cosine as
     # a residual condition — the same per-pair work as the batch
     # lane's equi-join + filter, emitted as one row per streamed input
-    cond = (F.col("n.cluster") == F.col("s.c2")) & (
-        F.round(cos, 6) >= threshold
-    )
+    cond = (F.col("n.cluster") == F.col("s.c2")) & (cos6 >= threshold)
     dups = new_tagged.join(seen, cond, "left_semi").select(
         "id", "cluster", F.lit(False).alias("keep")
     )

@@ -35,19 +35,17 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from openeo_processes_dask_spark.training.dedup import _md5_to_long
+
 #: hash width of :func:`_hash60`, shared by every sketch in this module
 _HASH_BITS = 60
 
 
 def _hash60(prefix: str, key: Column) -> Column:
-    """60-bit non-negative hash of ``key``: the first 15 hex digits of
-    md5(``prefix`` || key) as a long. DuckDB replays it as
+    """60-bit non-negative hash of ``key``: :func:`~.dedup._md5_to_long`
+    of ``prefix`` || key. DuckDB replays it as
     ``CAST('0x' || substr(md5(prefix || key), 1, 15) AS BIGINT)``."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(prefix), key.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    return _md5_to_long(F.concat(F.lit(prefix), key.cast("string")))
 
 
 def _group_list(group_cols) -> list[str]:
