@@ -101,6 +101,9 @@ CHANGED = [
     "contamination_ratio",
     "contamination_attribution",
     "streaming_contamination_screen",
+    # connected_components is large-star/small-star only (dedup_clusters,
+    # dedup_clusters_star, leakage_split and semdedup above), and harmonic
+    # centrality's checkpoint policy is fixed (harmonic above)
 ]
 
 _REPO = os.path.dirname(

@@ -775,10 +775,12 @@ def q_dedup_clusters(spark, sf_dir):
 
 
 def q_dedup_clusters_star(spark, sf_dir):
-    """Same pair graph as dedup_clusters, clustered with the O(log n)
-    large-star/small-star lane (training/dedup.py _cc_star, Kiveris et
-    al. 2014) — must produce byte-identical labels to the propagation
-    lane and the recursive-CTE oracle."""
+    """Same MinHash pair graph as dedup_clusters with every pair's
+    endpoints swapped (``id2 AS id1, id1 AS id2``), clustered by the
+    large-star/small-star connected_components (training/dedup.py,
+    Kiveris et al. 2014). Checks that the labels do not depend on edge
+    orientation: each label is its component's minimum id, so the
+    unswapped recursive-CTE oracle's rows still hold."""
     _setup(spark)
     from openeo_processes_dask_spark.training.dedup import (
         connected_components,
@@ -789,7 +791,8 @@ def q_dedup_clusters_star(spark, sf_dir):
     pairs = minhash_near_duplicates(
         docs, "doc_id", "text", n=3, num_hashes=64, bands=16, threshold=0.2
     )
-    return connected_components(pairs, algorithm="star").orderBy("id")
+    swapped = pairs.selectExpr("id2 AS id1", "id1 AS id2")
+    return connected_components(swapped).orderBy("id")
 
 
 def q_segment_dedup(spark, sf_dir):

@@ -1576,13 +1576,23 @@ def minhash_lsh_candidates(
     return pairs
 
 
-def _cc_star(edges: DataFrame, max_iterations: int) -> DataFrame:
-    """Two-phase large-star/small-star connected components (Kiveris et
-    al. 2014, "Connected Components in MapReduce and Beyond"), O(log n)
-    rounds on ANY graph shape — the adversarial-chain-safe lane.
+def connected_components(
+    pairs: DataFrame,
+    id1: str = "id1",
+    id2: str = "id2",
+    max_iterations: int = 50,
+) -> DataFrame:
+    """Connected components over a near-duplicate pair graph — the cluster
+    step that turns pairwise matches into canonical-document groups.
+    Returns (id, comp) where comp is the minimum id of id's component;
+    a node whose only pair is a self-loop labels itself.
 
-    ``edges``: distinct undirected pairs (a, b), a != b. Each round is two
-    groupBy+join phases, each keyed by node id:
+    Plan: two-phase large-star/small-star (Kiveris et al. 2014,
+    "Connected Components in MapReduce and Beyond"), O(log n) rounds on
+    any graph shape, so a long near-duplicate chain costs a few rounds
+    rather than one per hop. The edge set starts as the distinct pairs
+    in both orientations; each round is two groupBy+join phases, both
+    keyed by node id:
 
     - large-star: orient every edge both ways; per node u with neighborhood
       Γ(u), m = min(Γ(u) ∪ {u}); emit (v, m) for every v ∈ Γ(u), v > u.
@@ -1591,18 +1601,23 @@ def _cc_star(edges: DataFrame, max_iterations: int) -> DataFrame:
 
     Both phases preserve connectivity and only ever decrease the partner
     of a node, so the edge set converges to stars (member -> component
-    min). Per-round localCheckpoint truncates the logical plan (same
-    rationale as the propagation lane). Returns (id, comp)."""
-    # every node in the input gets a label — including nodes whose only
-    # pair is a self-loop (the propagation lane labels them comp=id; the
-    # a != b edge filter below would otherwise drop them entirely)
-    all_nodes = edges.select(F.col("u").alias("id")).union(
-        edges.select(F.col("v").alias("id"))
-    ).distinct()
-    E = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).where(
-        F.col("a") != F.col("b")
-    ).distinct().localCheckpoint(eager=True)
-    n_prev = E.count()  # checkpointed — a partition-count sum, no shuffle
+    min). Each round's edges are ``localCheckpoint``-ed: persist()
+    truncates execution but NOT the logical plan, so without the
+    checkpoint the self-referencing rounds grow the analyzed plan every
+    iteration — a driver OOM long before the data is the problem. If the
+    edge set is still changing after ``max_iterations`` rounds it raises
+    rather than returning wrong labels."""
+    edges = pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b"))
+    # one eager checkpoint of the input: the node list below reads it
+    # too, so the returned plan never re-runs the (often lazy) pair plan
+    edges = edges.union(edges.select("b", "a")).distinct().localCheckpoint(
+        eager=True
+    )
+    # every input node gets a label, including nodes whose only pair is a
+    # self-loop (the a != b edge filter below drops those pairs)
+    all_nodes = edges.select(F.col("a").alias("id")).distinct()
+    E = edges.where(F.col("a") != F.col("b"))
+    n_prev = E.count()  # a filtered scan of the checkpoint, no shuffle
     for _ in range(max_iterations):
         # large-star
         bid = E.union(E.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -1634,21 +1649,18 @@ def _cc_star(edges: DataFrame, max_iterations: int) -> DataFrame:
         # converged when the (distinct) edge set is unchanged. Both sides
         # are distinct sets, so equal cardinality + an empty ONE-sided
         # difference implies set equality — one cheap count per round
-        # (both relations are checkpointed) and the single anti-join job
-        # only runs in rounds where the counts already match (VERDICT r04
-        # #6: the old count+subtract pair cost an extra full shuffle every
-        # round).
+        # (both relations are checkpointed), and the anti-join job only
+        # runs in rounds where the counts already match.
         n_ss = E_ss.count()
-        if n_ss == n_prev and (
+        converged = n_ss == n_prev and (
             E_ss.join(E, ["a", "b"], "left_anti").limit(1).count() == 0
-        ):
-            E = E_ss
+        )
+        E, n_prev = E_ss, n_ss
+        if converged:
             break
-        E = E_ss
-        n_prev = n_ss
     else:
         raise RuntimeError(
-            "star connected_components did not converge in "
+            "connected_components did not converge in "
             f"{max_iterations} rounds — raise max_iterations (convergence "
             "is O(log n) rounds, so this indicates a pathological input)"
         )
@@ -1667,110 +1679,14 @@ def _cc_star(edges: DataFrame, max_iterations: int) -> DataFrame:
     return labeled.union(isolated)
 
 
-def connected_components(
-    pairs: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-    max_iterations: int = 50,
-    algorithm: str = "propagation",
-) -> DataFrame:
-    """Connected components over a near-duplicate pair graph — the cluster
-    step that turns pairwise matches into canonical-document groups.
-    Returns (id, comp) where comp is the minimum id reachable from id.
-
-    Plan: min-label propagation. Each round is one join + one groupBy
-    (both keyed by node id, so AQE reuses the exchange layout), and the
-    loop stops when a round changes nothing. Rounds needed = graph
-    diameter; near-dup clusters are dense (quasi-cliques — every member
-    matched the same shingles/bands), so diameters are small single digits
-    in practice. The per-round `changed` count is a driver-side scalar
-    action, not a collect of data. Each round's labels are
-    ``localCheckpoint``-ed: persist() truncates execution but NOT the
-    logical plan, so without the checkpoint the per-round self-referencing
-    join doubles the analyzed plan every iteration — exponential in graph
-    diameter, a driver OOM long before the data is the problem. For
-    adversarial long-chain graphs at 100 TB, swap in large-star/small-star
-    (Kiveris et al. 2014) which converges in O(log n) rounds with the same
-    join shape; the propagation loop here keeps the engine dependency-free
-    and the oracle exact. If the loop exhausts ``max_iterations`` while
-    labels are still changing (graph diameter > max_iterations), it raises
-    rather than returning silently wrong component labels.
-
-    ``algorithm="star"`` switches to the large-star/small-star lane
-    (:func:`_cc_star`): O(log n) rounds on any graph shape, the right
-    choice when the pair graph may contain long chains (e.g. a 100 TB
-    web-crawl dup graph). Both lanes produce identical labels (comp = min
-    id of the component); propagation stays the default because its
-    round count is observably the cluster diameter and its plan is the
-    cheaper of the two per round on the dense quasi-clique graphs near-dup
-    mining actually emits."""
-    if algorithm not in ("propagation", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    fwd = pairs.select(F.col(id1).alias("u"), F.col(id2).alias("v"))
-    rev = pairs.select(F.col(id2).alias("u"), F.col(id1).alias("v"))
-    if algorithm == "star":
-        return _cc_star(fwd.union(rev), max_iterations)
-    edges = fwd.union(rev).distinct().persist()
-    labels = edges.select(F.col("u").alias("id")).distinct().select(
-        "id", F.col("id").alias("comp")
-    ).persist()
-    try:
-        converged = False
-        for _ in range(max_iterations):
-            nbr = (
-                edges.join(
-                    labels.select(
-                        F.col("id").alias("v"), F.col("comp").alias("vc")
-                    ),
-                    "v",
-                )
-                .groupBy("u")
-                .agg(F.min("vc").alias("nc"))
-                .select(F.col("u").alias("id"), "nc")
-            )
-            new = (
-                labels.join(nbr, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("comp"), F.coalesce(F.col("nc"), F.col("comp"))
-                    ).alias("comp"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                new.join(
-                    labels.select(
-                        "id", F.col("comp").alias("old")
-                    ),
-                    "id",
-                )
-                .where(F.col("comp") < F.col("old"))
-                .count()
-            )
-            labels.unpersist()
-            labels = new
-            if changed == 0:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                "connected_components did not converge in "
-                f"{max_iterations} iterations (pair-graph diameter exceeds "
-                "the bound); raise max_iterations, or rerun with "
-                "algorithm='star' (O(log n) rounds on chain graphs)"
-            )
-        return labels
-    finally:
-        edges.unpersist()
-
-
 def dedup_clusters(
     pairs: DataFrame, id1: str = "id1", id2: str = "id2"
 ) -> DataFrame:
     """Cluster summary over near-duplicate pairs: one row per component
     with the canonical (minimum) id and member count — what a training
-    pipeline keeps after MinHash/SimHash matching."""
+    pipeline keeps after MinHash/SimHash matching. Components come from
+    :func:`connected_components`, so a chained cluster costs O(log n)
+    rounds, not one per hop."""
     comp = connected_components(pairs, id1, id2)
     return comp.groupBy(F.col("comp").alias("keep_id")).agg(
         F.count(F.lit(1)).alias("n_members")

@@ -57,9 +57,11 @@ def pagerank(
     and joined by the same ``src`` key, so AQE reuses the exchange; for a
     domain-level graph (node count in the millions) the rank relation is
     broadcastable and the edge relation never shuffles at all. Lineage is
-    truncated every ``checkpoint_interval`` iterations (localCheckpoint —
-    same driver-plan-blowup reasoning as connected_components,
-    training/dedup.py:572).
+    truncated every ``checkpoint_interval`` iterations (localCheckpoint:
+    persist() would cut execution but not the analyzed plan, which
+    otherwise grows with every self-referencing iteration). Unlike
+    :func:`harmonic_centrality`, no round is re-read later, and an A/B
+    measured per-round checkpointing here as a 2.5x regression.
     """
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
@@ -229,8 +231,6 @@ def harmonic_centrality(
     p: int = 4,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_interval: int = 1,
-    materialize_edges: bool = True,
 ) -> DataFrame:
     """Approximate harmonic centrality via HyperBall (Boldi & Vigna,
     2013) — the authority metric Common Crawl actually publishes for its
@@ -253,30 +253,16 @@ def harmonic_centrality(
     2^(S-rho) as EXACT int64 before ONE float division + the standard
     linear-counting branch, so even the float tail is a pure function of
     the register table. Per-node state is 2^p registers — at 100 TB the
-    register relation is nodes x 2^p rows, edges never widen, and
-    lineage is truncated every ``checkpoint_interval`` rounds.
+    register relation is nodes x 2^p rows and edges never widen.
 
-    ``checkpoint_interval`` defaults to 1 (r13): unlike pagerank, every
-    round's register table is re-read by its ball ESTIMATE at the end,
-    so un-materialized rounds recompute the register chain per ball
-    (the r_t subtree appears in b_t AND r_{t+1}). Materializing each
-    round is the Pregel-style superstep shape; measured at sf0.1:
-    2.64 s -> 2.25 s for identical output. (pagerank keeps its interval
-    at 5: it never re-reads old iterations, and an A/B showed per-round
-    checkpointing there is a 2.5x regression.)
-
-    ``materialize_edges`` (r13, guide §2.4/§5): the distinct edge
-    relation is consumed by EVERY round's neighbor join plus the node
-    seeding — and because each round ends in an eager checkpoint (its
-    own action), AQE exchange reuse cannot share the dedup across
-    actions, so the raw-edge scan + distinct shuffle re-ran once per
-    round. One eager localCheckpoint pays that scan exactly once; every
-    consumer then reads the materialized (src, dst) relation — the same
-    persisted-edge-table shape a production HyperBall run starts from.
-    The stored copy is the DEDUPLICATED edge list (8+8 bytes per edge),
-    strictly smaller than the raw input. Identical output (checkpoint
-    is value-transparent); interleaved min-of-5 A/B at sf0.1 under
-    matched load: 3.23 s -> 2.31 s.
+    Materialization policy (both checkpoints are value-transparent):
+    every round's register table is ``localCheckpoint``-ed, because each
+    one is re-read by its ball estimate at the end as well as by the next
+    round (the Pregel superstep shape; 2.64 -> 2.25 s at sf0.1 against no
+    per-round checkpoint). The distinct edge list is checkpointed once,
+    up front, because every round's neighbor join reads it and each
+    round's eager checkpoint is its own action, so AQE cannot share the
+    dedup shuffle across rounds (3.23 -> 2.31 s at sf0.1).
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
@@ -293,12 +279,10 @@ def harmonic_centrality(
         )
         .where(F.col("src") != F.col("dst"))
         .distinct()
+        # blocks are ContextCleaner-released with the returned plan, the
+        # same lifetime as the per-round register checkpoints below
+        .localCheckpoint(eager=True)
     )
-    if materialize_edges:
-        # blocks are ContextCleaner-released with the returned plan
-        # (ADVICE r7 cache-hygiene rule; same lifetime as the per-round
-        # register checkpoints below)
-        e = e.localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -345,7 +329,7 @@ def harmonic_centrality(
             .groupBy("node", "bucket")
             .agg(F.max("rho").alias("rho"))
         )
-        if t % checkpoint_interval == 0 and t < iterations:
+        if t < iterations:
             r = r.localCheckpoint(eager=True)
         balls.append(estimate(r, f"b{t}"))
     out = balls[0]

@@ -643,7 +643,8 @@ def leakage_safe_split(
     Plan at 100 TB: connected components over the PAIR graph (pairs are
     the small relation — the near-dup subset), one left join back onto
     the corpus keyed by id, and a pure hash projection. Components are
-    the same O(log n)/O(diameter) lanes dedup_clusters uses.
+    the large-star/small-star rounds dedup_clusters uses: O(log n) rounds,
+    so a long chain of near-duplicates still lands in one fold.
     """
     if n_folds < 2:
         raise ValueError(f"n_folds must be >= 2, got {n_folds}")

@@ -733,10 +733,7 @@ def semdedup_pairs(
         kmeans_assign,
         kmeans_fit,
     )
-    from openeo_processes_dask_spark.training.dedup import (
-        _bucket_cap,
-        connected_components,
-    )
+    from openeo_processes_dask_spark.training.dedup import _bucket_cap
 
     cents = kmeans_fit(
         df, k=k, iterations=iterations, id_col=id_col, vec_col=vec_col,

@@ -223,29 +223,23 @@ def test_harmonic_validates(spark):
 
 
 def test_harmonic_materialize_edges_identical(spark):
-    """r13 optimization pin: the edge-table materialization (one eager
-    localCheckpoint instead of re-deriving the distinct edge relation in
-    every round's checkpoint action) is value-transparent — both lanes
-    must emit the identical register/estimate table."""
+    """The materialized edge table is the DISTINCT edge list: an input
+    with every edge duplicated gives the same table as the same edges
+    without duplicates."""
     from openeo_processes_dask_spark.training.graph import (
         harmonic_centrality,
     )
 
-    edges = [(i % 19, (i * 5 + 3) % 19) for i in range(50)]
-    # duplicate rows exercise the distinct the materialization captures
-    df = spark.createDataFrame(edges + edges, "src long, dst long")
-    mat = sorted(
-        map(tuple, harmonic_centrality(df, iterations=2, p=4).collect())
-    )
+    edges = sorted({(i % 19, (i * 5 + 3) % 19) for i in range(50)})
+    once = spark.createDataFrame(edges, "src long, dst long")
+    twice = spark.createDataFrame(edges + edges, "src long, dst long")
     ref = sorted(
-        map(
-            tuple,
-            harmonic_centrality(
-                df, iterations=2, p=4, materialize_edges=False
-            ).collect(),
-        )
+        map(tuple, harmonic_centrality(once, iterations=2, p=4).collect())
     )
-    assert mat == ref
+    got = sorted(
+        map(tuple, harmonic_centrality(twice, iterations=2, p=4).collect())
+    )
+    assert got == ref
 
 
 def test_triangle_plan_has_no_window(spark):

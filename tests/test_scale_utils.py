@@ -197,27 +197,23 @@ def test_aggregate_spatial_geometry_guard(spark, monkeypatch):
 
 
 def test_connected_components_star_chain(spark):
-    """The large-star/small-star lane converges in O(log n) rounds on the
-    adversarial chain graph that makes min-label propagation raise
-    (VERDICT r03 #8), and produces identical labels on branchy graphs."""
+    """Large-star/small-star converges in O(log n) rounds on the
+    adversarial chain graph (VERDICT r03 #8), within a per-round job
+    budget, and labels a random branchy graph like a union-find."""
     import random
 
     from openeo_processes_dask_spark.training.dedup import (
         connected_components,
     )
 
-    # 40-node chain: diameter 39. Propagation needs ~39 rounds so it raises
-    # at 10; star needs ~2*log2(40) ≈ 7-8 rounds (simulated: 7), so the
-    # same 10-round budget succeeds — that's the O(diameter) vs O(log n)
-    # gap this lane exists for.
+    # 40-node chain: diameter 39, but ~2*log2(40) rounds (simulated: 7),
+    # so a 10-round budget suffices
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(39)], "id1 bigint, id2 bigint"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iterations=10)
     sc = spark.sparkContext
     sc.setJobGroup("star_cc_gate", "star cc job-count gate")
-    star = connected_components(chain, max_iterations=10, algorithm="star")
+    star = connected_components(chain, max_iterations=10)
     got = {r["id"]: r["comp"] for r in star.collect()}
     sc.setJobGroup(None, None)
     assert got == {i: 0 for i in range(40)}
@@ -229,24 +225,51 @@ def test_connected_components_star_chain(spark):
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("star_cc_gate"))
     assert n_jobs <= 115, f"star CC round cost regressed: {n_jobs} jobs"
 
-    # random graph: both lanes must agree exactly
+    # random graph: labels equal the minimum id of each union-find set
     rnd = random.Random(7)
     edges = [
         (rnd.randrange(60), rnd.randrange(60)) for _ in range(80)
     ]
     edges = [(a, b) for a, b in edges if a != b]
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
     pairs = spark.createDataFrame(edges, "id1 bigint, id2 bigint")
-    prop = {
+    got = {
         r["id"]: r["comp"]
-        for r in connected_components(pairs, max_iterations=60).collect()
+        for r in connected_components(pairs, max_iterations=20).collect()
     }
-    star2 = {
-        r["id"]: r["comp"]
-        for r in connected_components(
-            pairs, max_iterations=20, algorithm="star"
-        ).collect()
-    }
-    assert prop == star2
+    assert got == {x: find(x) for x in parent}
+
+
+def test_connected_components_long_chain_default_budget(spark):
+    """A 64-node near-duplicate chain (diameter 63, above the default 50
+    rounds) clusters under the default max_iterations: one component,
+    and leakage_safe_split puts every node in one fold."""
+    from openeo_processes_dask_spark.training.dedup import (
+        connected_components,
+    )
+    from openeo_processes_dask_spark.training.sampling import (
+        leakage_safe_split,
+    )
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "id1 bigint, id2 bigint"
+    )
+    comp = {r["id"]: r["comp"] for r in connected_components(chain).collect()}
+    assert comp == {i: 0 for i in range(64)}
+    docs = spark.createDataFrame([(i,) for i in range(64)], "doc_id bigint")
+    split = leakage_safe_split(docs, chain).collect()
+    assert len(split) == 64
+    assert {r["comp_id"] for r in split} == {0}
+    assert len({r["fold"] for r in split}) == 1
 
 
 def test_segment_duplicates_chunks_and_paragraphs(spark):
@@ -315,21 +338,17 @@ def test_decontaminate_flags_ngram_overlap(spark):
 
 
 def test_connected_components_star_self_loops(spark):
-    """Self-loop-only nodes keep a label under the star lane (regression:
-    they were silently dropped, diverging from propagation)."""
+    """Self-loop-only nodes keep a label of their own (regression: the
+    a != b edge filter once dropped them silently)."""
     from openeo_processes_dask_spark.training.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(5, 5), (1, 2), (7, 7)], "id1 bigint, id2 bigint"
     )
-    star = {
-        r["id"]: r["comp"]
-        for r in connected_components(pairs, algorithm="star").collect()
-    }
-    prop = {
+    got = {
         r["id"]: r["comp"] for r in connected_components(pairs).collect()
     }
-    assert star == prop == {1: 1, 2: 1, 5: 5, 7: 7}
+    assert got == {1: 1, 2: 1, 5: 5, 7: 7}
 
 
 def test_skew_split_join_equals_plain_join(spark):
