@@ -104,6 +104,7 @@ CHANGED = [
     # connected_components is large-star/small-star only (dedup_clusters,
     # dedup_clusters_star, leakage_split and semdedup above), and harmonic
     # centrality's checkpoint policy is fixed (harmonic above)
+    # batch MinHash lanes share _banded_minhash; stream screens carry sigs
 ]
 
 _REPO = os.path.dirname(

@@ -6,9 +6,10 @@ fingerprint is ``textanalysis.doc_fingerprint``; the distinct word-shingle
 digest relation of the Jaccard, MinHash and decontamination lanes is
 ``_shingle_keys``; the MinHash coefficients, band buckets,
 signature-agreement estimate and per-row stream signature are one SQL
-fragment each (``_minhash_coeffs`` .. ``_agreement_sql``);
-every 64-bit-signature lane (SimHash, perceptual hashes) runs the one
-banded Hamming join ``_banded_hamming``.
+fragment each (``_minhash_coeffs`` .. ``_agreement_sql``); the batch
+MinHash near-dup and ingest lanes run the one banded MinHash join
+``_banded_minhash``; every 64-bit-signature lane (SimHash, perceptual
+hashes) runs the one banded Hamming join ``_banded_hamming``.
 
 Shuffle topology is the whole game at 100 TB:
 - exact dedup: one hash-groupBy on a 32-char digest (not the full text) —
@@ -176,7 +177,6 @@ def ingest_screen(
     bands: int = 16,
     threshold: float = 0.5,
     seed: int = 42,
-    seen_bands: DataFrame | None = None,
     new_signatures: DataFrame | None = None,
 ) -> DataFrame:
     """One-pass ingest verdict for a new document batch against the
@@ -199,10 +199,8 @@ def ingest_screen(
     batch duplicates are deliberately out of scope (compose with
     :func:`exact_duplicates` / :func:`minhash_near_duplicates` over the
     kept rows, then append their fingerprints/signatures to the screen
-    tables). Pass ``seen_bands`` (:func:`band_signatures`, persisted)
-    to skip the inline archive banding — probe 22's asymptote;
-    ``new_signatures`` (the batch's own signature table, same family)
-    to skip the near lane's inline build (see
+    tables). Pass ``new_signatures`` (the batch's own signature table,
+    same family) to skip the near lane's inline build (see
     :func:`minhash_incremental`). Returns
     ``(id, exact_dup, near_dup, keep)``, one row per new document: the
     exact and text lanes of :func:`ingest_screen_multimodal`, with
@@ -210,8 +208,7 @@ def ingest_screen(
     return ingest_screen_multimodal(
         df_new, seen_fingerprints, seen_signatures, id_col=id_col,
         text_col=text_col, n=n, num_hashes=num_hashes, bands=bands,
-        text_threshold=threshold, seed=seed, seen_bands=seen_bands,
-        new_signatures=new_signatures,
+        text_threshold=threshold, seed=seed, new_signatures=new_signatures,
     ).select(
         "id", "exact_dup", F.col("text_near_dup").alias("near_dup"), "keep"
     )
@@ -236,7 +233,6 @@ def ingest_screen_multimodal(
     max_hamming: int = 3,
     hash_bands: int = 8,
     seed: int = 42,
-    seen_bands: DataFrame | None = None,
     new_signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Full multi-modality ingest verdict (r13, VERDICT r12 #4): the
@@ -263,9 +259,8 @@ def ingest_screen_multimodal(
     and its flag is a literal ``False`` in the verdict — a corpus
     without embeddings or media still gets the same relation shape, so
     downstream consumers never branch on schema. At least one lane must
-    be enabled. ``seen_bands`` (:func:`band_signatures`, persisted)
-    skips the text lane's inline archive banding — probe 22's
-    asymptote.
+    be enabled. ``new_signatures`` is passed to the text lane (see
+    :func:`minhash_incremental`).
 
     Returns ``(id, exact_dup, text_near_dup, semantic_dup,
     perceptual_dup, keep)``, one row per new item; ``keep`` = no
@@ -319,7 +314,7 @@ def ingest_screen_multimodal(
                 df_new.select(id_col, text_col), seen_signatures, id_col,
                 text_col, n=n, num_hashes=num_hashes, bands=bands,
                 threshold=text_threshold, seed=seed,
-                seen_bands=seen_bands, new_signatures=new_signatures,
+                new_signatures=new_signatures,
             )
             .select(F.col("new_id").alias("id"))
             .distinct()
@@ -1333,16 +1328,15 @@ def shared_key_incremental(
     Returns ``(new_id, seen_id, n_shared >= min_shared)``; overlap
     counts are exact per surviving key, like the batch lane.
 
-    ``seen_distinct`` (r13 continuation — the ``seen_bands``
-    persisted-table pattern applied here): the archive side is
-    deduplicated per ingest by default, which is one archive-METADATA
-    exchange per increment; a production loop that persists the
-    archive relation DISTINCT on ``(id, key)`` (deduplicate ONCE at
-    write time — e.g. :func:`winnow_fingerprints` can repeat a
-    fingerprint across positions of one doc) passes
-    ``seen_distinct=True`` and the screen skips that exchange entirely
-    — with a non-distinct table this would inflate ``n_shared``, so
-    the flag is an explicit caller contract, not a sniffed property.
+    ``seen_distinct``: the archive side is deduplicated per ingest by
+    default, which is one archive-METADATA exchange per increment; a
+    production loop that persists the archive relation DISTINCT on
+    ``(id, key)`` (deduplicate ONCE at write time — e.g.
+    :func:`winnow_fingerprints` can repeat a fingerprint across
+    positions of one doc) passes ``seen_distinct=True`` and the screen
+    skips that exchange entirely — with a non-distinct table this would
+    inflate ``n_shared``, so the flag is an explicit caller contract,
+    not a sniffed property.
     Identical results when the contract holds (pinned by test)."""
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
@@ -1523,57 +1517,82 @@ def _band_explode(sig: str, bands: int, rows_per_band: int):
     return F.expr(f"explode(array({parts}))")
 
 
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    """Signature slots per band; ``bands`` must divide ``num_hashes``,
+    or the last ``num_hashes % bands`` slots would never be banded."""
+    if num_hashes % bands:
+        raise ValueError(
+            f"bands ({bands}) must divide num_hashes ({num_hashes})"
+        )
+    return num_hashes // bands
+
+
 def _band_signatures(
     signatures: DataFrame, bands: int, rows_per_band: int
 ) -> DataFrame:
-    """(id, band, bucket) rows from a signature table."""
+    """(id, signature, band, bucket) rows from a signature table, one
+    per band. The signature rides along, so a consumer that needs it
+    does not join it back by id; one that does not gets it pruned by
+    the optimizer."""
     return signatures.select(
-        "id", _band_explode("signature", bands, rows_per_band).alias("bb")
-    ).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
+        "id", "signature",
+        _band_explode("signature", bands, rows_per_band).alias("bb"),
+    ).select("id", "signature", "bb.band", "bb.bucket")
 
 
-def minhash_lsh_candidates(
-    signatures: DataFrame,
-    bands: int = 16,
-    rows_per_band: int = 4,
+def _banded_minhash(
+    sigs: DataFrame,
+    seen: DataFrame | None,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Band the signatures and equi-join on (band_idx, band_hash) — the
-    LSH trick that replaces the O(n²) comparison with a shuffle keyed by
-    band buckets. Returns distinct candidate (id1, id2) pairs.
+    """The banded MinHash join behind the batch near-dup and ingest
+    lanes: band each ``(id, signature)`` row, equi-join on (band,
+    bucket), keep the distinct candidate pairs, join both signatures
+    back and keep the pairs whose agreement estimate reaches
+    ``threshold``. With ``seen=None`` it is the self-join of ``sigs``
+    (``id1 < id2``), returning (id1, id2, est_jaccard); otherwise
+    strictly ``sigs`` x ``seen``, returning (new_id, seen_id,
+    est_jaccard) with the estimate rounded to 6 decimals.
 
-    ``max_bucket_size``: the bucket-skew guard. All-pairs inside a bucket
-    is quadratic in bucket size, and real corpora HAVE huge buckets —
-    boilerplate families, mirrored sites, mass-duplicated docs (measured
-    here: a 10× corpus where every doc has 9 near-twins turned the
-    verification join from 9 s to 117 s). Buckets larger than the cap
-    switch from all-pairs to a STAR pattern (bucket-min id paired with
-    every other member): linear in bucket size, and lossless for the
-    clustering consumer (connected components recovers the family from
-    the star edges — every member still reaches the same component).
-    Only the direct pairwise-listing consumer sees fewer pairs, which is
-    why the default (None) keeps exact all-pairs semantics."""
-    banded = _band_signatures(signatures, bands, rows_per_band)
-    if max_bucket_size is not None:
-        banded, big_pairs = _bucket_cap(
-            banded, ["band", "bucket"], max_bucket_size
-        )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
+    ``max_bucket_size`` (self-join only) is the bucket-skew guard of
+    :func:`_bucket_cap`: all-pairs inside a bucket is quadratic, and
+    real corpora have huge buckets (boilerplate families, mirrors; a
+    10x corpus where every doc has 9 near-twins took the verification
+    join from 9 s to 117 s). Oversized buckets emit star pairs, which
+    are verified like any other candidate. Lazy: nothing is persisted
+    or materialized here."""
+    rows_per_band = _rows_per_band(num_hashes, bands)
+    est = _agreement_sql("sig1", "sig2", num_hashes)
+    a = _band_signatures(sigs, bands, rows_per_band)
+    on = "a.band = b.band AND a.bucket = b.bucket"
+    star = None
+    if seen is None:
+        n1, n2 = "id1", "id2"
+        if max_bucket_size is not None:
+            a, star = _bucket_cap(a, ["band", "bucket"], max_bucket_size)
+        # a self-join: both signatures are joined back from sigs
+        b, seen = a, sigs
+        on += " AND a.id < b.id"
+    else:
+        n1, n2 = "new_id", "seen_id"
+        est = f"round({est}, 6)"
+        b = _band_signatures(seen, bands, rows_per_band)
+    cands = (
+        a.alias("a").join(b.alias("b"), F.expr(on))
+        .selectExpr(f"a.id AS {n1}", f"b.id AS {n2}")
         .distinct()
     )
-    if max_bucket_size is not None:
-        pairs = pairs.union(big_pairs).distinct()
-    return pairs
+    if star is not None:
+        cands = cands.union(star).distinct()
+    return (
+        cands.join(sigs.selectExpr(f"id AS {n1}", "signature AS sig1"), n1)
+        .join(seen.selectExpr(f"id AS {n2}", "signature AS sig2"), n2)
+        .selectExpr(n1, n2, f"{est} AS est_jaccard")
+        .where(f"est_jaccard >= {float(threshold)!r}D")
+    )
 
 
 def connected_components(
@@ -1708,60 +1727,23 @@ def minhash_near_duplicates(
     Jaccard (signature agreement) filter. Returns (id1, id2, est_jaccard).
 
     ``max_bucket_size``: pass a cap (e.g. 50) on dup-heavy corpora — see
-    :func:`minhash_lsh_candidates`; keeps the candidate set linear in
-    bucket size while staying lossless for the clustering consumer."""
-    rows_per_band = num_hashes // bands
+    :func:`_banded_minhash`; keeps the candidate set linear in bucket
+    size while staying lossless for the clustering consumer (connected
+    components recovers the family from the star edges). The default
+    (None) keeps exact all-pairs semantics."""
     # persist: the signature table feeds candidate generation AND both sides
     # of the verification join — without it the shingle explode + 64-way
     # min-aggregate recomputes 4×. (At cluster scale you'd write signatures
     # to a table instead.)
     sigs = minhash_signatures(df, id_col, text_col, n, num_hashes, seed).persist()
     try:
-        cands = minhash_lsh_candidates(
-            sigs, bands, rows_per_band, max_bucket_size
-        )
-        s1 = sigs.select(
-            F.col("id").alias("id1"), F.col("signature").alias("sig1")
-        )
-        s2 = sigs.select(
-            F.col("id").alias("id2"), F.col("signature").alias("sig2")
-        )
-        out = (
-            cands.join(s1, "id1")
-            .join(s2, "id2")
-            .withColumn(
-                "est_jaccard",
-                F.expr(_agreement_sql("sig1", "sig2", num_hashes)),
-            )
-            .where(F.col("est_jaccard") >= threshold)
-            .select("id1", "id2", "est_jaccard")
-        )
         # release the corpus-sized signature cache after materializing
         # the (small) pair set — PPJoin unpersist contract (ADVICE r7)
-        return out.localCheckpoint(eager=True)
+        return _banded_minhash(
+            sigs, None, num_hashes, bands, threshold, max_bucket_size
+        ).localCheckpoint(eager=True)
     finally:
         sigs.unpersist()
-
-
-def band_signatures(
-    signatures: DataFrame, bands: int = 16, num_hashes: int = 64
-) -> DataFrame:
-    """Public banded view of a MinHash signature table — ``(id, band,
-    bucket)`` rows, 16 per signature — for PERSISTING corpus-side
-    (r13, the probe-22 asymptote made concrete): at 100 TB the
-    per-ingest archive work of :func:`minhash_incremental` /
-    :func:`ingest_screen` is banding the persisted signature table;
-    write THIS relation once (ideally bucketed by ``(band, bucket)``,
-    e.g. via sources/load.py's bucketed sink) and pass it back through
-    their ``seen_bands`` parameter, and the archive side of every
-    ingest becomes a pruned columnar scan instead of a recomputed
-    projection. ``bands`` must divide ``num_hashes``; both MUST match
-    the family that built ``signatures``."""
-    if num_hashes % bands:
-        raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes})"
-        )
-    return _band_signatures(signatures, bands, num_hashes // bands)
 
 
 def minhash_incremental(
@@ -1774,7 +1756,6 @@ def minhash_incremental(
     bands: int = 16,
     threshold: float = 0.5,
     seed: int = 42,
-    seen_bands: DataFrame | None = None,
     new_signatures: DataFrame | None = None,
 ) -> DataFrame:
     """NEAR-dup screen of a new batch against the persisted signature
@@ -1793,13 +1774,6 @@ def minhash_incremental(
     MUST match the run that built ``seen_signatures`` — minhash
     estimates are only meaningful within one hash family.
 
-    ``seen_bands`` (r13): the archive's PRE-BANDED table
-    (:func:`band_signatures`, persisted corpus-side alongside the
-    signatures) — when given, the inline archive banding is skipped
-    entirely, so the per-ingest archive work is a scan of 16-byte band
-    rows (bucketed layouts make it co-located too). Identical results
-    either way (pinned by test).
-
     ``new_signatures`` (r13, guide §2.6): pass the NEW batch's already-
     materialized signature table (:func:`minhash_signatures` over
     ``df_new`` with the SAME family params) to skip the inline build —
@@ -1808,65 +1782,29 @@ def minhash_incremental(
     Identical results either way (the screen derives everything from
     the signatures); ``df_new`` is unused when it is given.
     """
-    rows_per_band = num_hashes // bands
     if new_signatures is not None:
-        sigs_new = new_signatures
-    else:
-        sigs_new = minhash_signatures(
-            df_new, id_col, text_col, n, num_hashes, seed
-        ).persist()
+        # With BOTH signature tables caller-materialized there is no
+        # cache to release, so an eager checkpoint here would only pay
+        # an extra serial driver action at construction time. Returning the lazy plan lets the
+        # consumer's single action run the band join, where the
+        # scheduler overlaps it with the caller's sibling lanes
+        # (ingest_screen / ingest_screen_multimodal). Same computation,
+        # same rows.
+        return _banded_minhash(
+            new_signatures, seen_signatures, num_hashes, bands, threshold
+        )
+    sigs_new = minhash_signatures(
+        df_new, id_col, text_col, n, num_hashes, seed
+    ).persist()
     try:
-        bn = _band_signatures(sigs_new, bands, rows_per_band)
-        bs = (
-            seen_bands.select("id", "band", "bucket")
-            if seen_bands is not None
-            else _band_signatures(seen_signatures, bands, rows_per_band)
-        )
-        cands = (
-            bn.alias("a")
-            .join(
-                bs.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket")),
-            )
-            .select(
-                F.col("a.id").alias("new_id"), F.col("b.id").alias("seen_id")
-            )
-            .distinct()
-        )
-        s1 = sigs_new.select(
-            F.col("id").alias("new_id"), F.col("signature").alias("sig1")
-        )
-        s2 = seen_signatures.select(
-            F.col("id").alias("seen_id"), F.col("signature").alias("sig2")
-        )
-        out = (
-            cands.join(s1, "new_id")
-            .join(s2, "seen_id")
-            .withColumn(
-                "est_jaccard",
-                F.expr(f"round({_agreement_sql('sig1', 'sig2', num_hashes)}, 6)"),
-            )
-            .where(F.col("est_jaccard") >= threshold)
-            .select("new_id", "seen_id", "est_jaccard")
-        )
-        if new_signatures is not None:
-            # r14 (guide §2.6/§5): with BOTH signature tables caller-
-            # materialized there is no cache to release, so the eager
-            # checkpoint here would only pay an extra serial driver
-            # action at construction time. Returning the lazy plan lets
-            # the consumer's single action run the band join, where the
-            # scheduler overlaps it with the caller's sibling lanes
-            # (ingest_screen / ingest_screen_multimodal). Same
-            # computation, same rows.
-            return out
         # release the batch-sized signature cache after materializing the
         # (small) match set — PPJoin unpersist contract (ADVICE r7).
         # seen_signatures is caller-owned and untouched.
-        return out.localCheckpoint(eager=True)
+        return _banded_minhash(
+            sigs_new, seen_signatures, num_hashes, bands, threshold
+        ).localCheckpoint(eager=True)
     finally:
-        if new_signatures is None:
-            sigs_new.unpersist()
+        sigs_new.unpersist()
 
 
 def stream_minhash_screen(
@@ -1903,47 +1841,41 @@ def stream_minhash_screen(
       deterministic key-set contract.
 
     ``seen_signatures`` is the archive's persisted (id, signature)
-    table; its banding + the stream-static join run per micro-batch.
+    table; it is banded with its signature carried along (no join back
+    by id), and that banding + the stream-static join run per
+    micro-batch.
     Returns ``(new_id, seen_id, est_jaccard >= threshold)`` rows, at
     least one per matching pair; ``SELECT DISTINCT`` of the drained
     table equals the batch :func:`minhash_incremental` pair set
     (pinned by test). Docs with fewer than ``n`` tokens emit nothing —
     the batch contract."""
-    rows_per_band = num_hashes // bands
-    base = (
+    rows_per_band = _rows_per_band(num_hashes, bands)
+    new = (
         stream.select(
             F.col(id_col).alias("id"),
             tokens(F.lower(F.col(text_col))).alias("toks"),
         )
         .select("id", _shingle_digests(F.col("toks"), n).alias("xs"))
         .where(F.size("xs") > 0)
-    )
-    banded_new = (
-        base.select(
-            F.col("id").alias("new_id"),
-            F.expr(_minhash_row_signature("xs", num_hashes, seed)).alias("sig1"),
-        )
         .select(
-            "new_id", "sig1",
-            _band_explode("sig1", bands, rows_per_band).alias("bb"),
+            "id",
+            F.expr(_minhash_row_signature("xs", num_hashes, seed))
+            .alias("signature"),
         )
-        .select("new_id", "sig1", "bb.band", "bb.bucket")
     )
-    banded_seen = _band_signatures(
-        seen_signatures, bands, rows_per_band
-    ).join(
-        seen_signatures.select(
-            F.col("id"), F.col("signature").alias("sig2")
-        ),
-        "id",
-    ).select(
-        F.col("id").alias("seen_id"), "sig2", "band", "bucket"
-    )
-    est = f"round({_agreement_sql('sig1', 'sig2', num_hashes)}, 6)"
+    est = _agreement_sql("a.signature", "b.signature", num_hashes)
     return (
-        banded_new.join(banded_seen, ["band", "bucket"])
-        .select("new_id", "seen_id", F.expr(est).alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= threshold)
+        _band_signatures(new, bands, rows_per_band).alias("a")
+        .join(
+            _band_signatures(seen_signatures, bands, rows_per_band)
+            .alias("b"),
+            F.expr("a.band = b.band AND a.bucket = b.bucket"),
+        )
+        .selectExpr(
+            "a.id AS new_id", "b.id AS seen_id",
+            f"round({est}, 6) AS est_jaccard",
+        )
+        .where(f"est_jaccard >= {float(threshold)!r}D")
     )
 
 
@@ -2033,7 +1965,6 @@ def stream_ingest_screen_multimodal(
             "stream_ingest_screen_multimodal: every lane is disabled — "
             "pass at least one archive screen table"
         )
-    rows_per_band = num_hashes // bands
     band_bits = 64 // hash_bands
 
     # ---- per-row enrichment: every ENABLED lane's key as a COLUMN
@@ -2043,6 +1974,7 @@ def stream_ingest_screen_multimodal(
     # and distance term that reads them (the repo's measured-pitfalls
     # contract) ----
     if seen_signatures is not None:
+        rows_per_band = _rows_per_band(num_hashes, bands)
         stream = stream.select(
             "*", tokens(F.lower(F.col(text_col))).alias("__toks__")
         )
@@ -2101,14 +2033,8 @@ def stream_ingest_screen_multimodal(
     if seen_signatures is not None:
         sig_buckets = (
             _band_signatures(seen_signatures, bands, rows_per_band)
-            .join(
-                seen_signatures.select(
-                    "id", F.col("signature").alias("s2")
-                ),
-                "id",
-            )
             .groupBy("band", "bucket")
-            .agg(F.collect_list("s2").alias("sigs"))
+            .agg(F.collect_list("signature").alias("sigs"))
         )
         # per band, built from SQL strings: the same table from Column
         # objects costs ~4x the py4j round trips
@@ -2278,9 +2204,9 @@ def simhash_near_duplicates(
     an exact popcount. Returns (id1, id2, hamming).
 
     ``max_bucket_size``: same dup-family skew guard as the MinHash lane
-    (see minhash_lsh_candidates) — oversized chunk buckets emit star
-    pairs instead of all-pairs; star pairs are hamming-verified through a
-    signature join like any other candidate."""
+    (see :func:`minhash_near_duplicates`) — oversized chunk buckets emit
+    star pairs instead of all-pairs; star pairs are hamming-verified
+    through a signature join like any other candidate."""
     # persist: both sides of the banded self-join read the signatures
     sigs = simhash_signatures(df, id_col, text_col).persist()
     try:

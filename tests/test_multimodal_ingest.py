@@ -167,55 +167,26 @@ def test_optional_lanes_subset_and_validation(spark):
         ingest_screen_multimodal(new, fps, None, members, None)
 
 
-def test_prebanded_archive_path_matches_inline(spark):
-    """band_signatures persisted corpus-side (probe 22 asymptote): the
-    screen with a pre-banded archive table returns identical verdicts
-    to inline banding."""
-    from openeo_processes_dask_spark.training.dedup import (
-        band_signatures,
-        minhash_incremental,
-    )
-
-    _, new, fps, sigs, members, cents, hashes = _fixture(spark)
-    pre = band_signatures(sigs, bands=16, num_hashes=64)
-    inline = sorted(
-        tuple(r)
-        for r in minhash_incremental(
-            new, sigs, "id", "text", threshold=0.2
-        ).collect()
-    )
-    banded = sorted(
-        tuple(r)
-        for r in minhash_incremental(
-            new, sigs, "id", "text", threshold=0.2, seen_bands=pre
-        ).collect()
-    )
-    assert inline == banded and inline
-    full = ingest_screen_multimodal(
-        new, fps, sigs, members, cents, hashes,
-        id_col="id", text_col="text", vec_col="emb", sig_col="psig",
-        text_threshold=0.2, sem_threshold=0.95, max_hamming=3,
-        hash_bands=8,
-    )
-    full_pre = ingest_screen_multimodal(
-        new, fps, sigs, members, cents, hashes,
-        id_col="id", text_col="text", vec_col="emb", sig_col="psig",
-        text_threshold=0.2, sem_threshold=0.95, max_hamming=3,
-        hash_bands=8, seen_bands=pre,
-    )
-    assert sorted(map(tuple, full.collect())) == sorted(
-        map(tuple, full_pre.collect())
-    )
-
-
 def test_band_signatures_validates_divisibility(spark):
+    """Every MinHash lane bands all ``num_hashes`` slots or raises:
+    64 hashes in 7 bands would leave one slot unbanded."""
     import pytest
 
-    from openeo_processes_dask_spark.training.dedup import band_signatures
+    from openeo_processes_dask_spark.training.dedup import (
+        minhash_incremental,
+        minhash_near_duplicates,
+        stream_minhash_screen,
+    )
 
-    _, _, _, sigs, _, _, _ = _fixture(spark)
-    with pytest.raises(ValueError, match="must divide"):
-        band_signatures(sigs, bands=7, num_hashes=64)
+    _, new, _, sigs, _, _, _ = _fixture(spark)
+    kw = dict(num_hashes=64, bands=7)
+    for build in (
+        lambda: minhash_near_duplicates(new, "id", "text", **kw),
+        lambda: minhash_incremental(new, sigs, "id", "text", **kw),
+        lambda: stream_minhash_screen(new, sigs, "id", "text", **kw),
+    ):
+        with pytest.raises(ValueError, match="must divide"):
+            build()
 
 
 def test_stream_optional_lanes_match_batch(spark, tmp_path):
