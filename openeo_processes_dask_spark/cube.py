@@ -20,6 +20,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field, replace
 from typing import Optional
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame
 
 # Name-guessing tables — same guesses as reference cubes/_xr_interop.py:7-21.
@@ -174,6 +175,16 @@ class DataCube:
         return f"DataCube(dims={self.meta.dims}, value={self.meta.value_col!r})"
 
 
+def quoted(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def labelled(dims) -> str:
+    """SQL predicate: no dim label of the row is NULL."""
+    return " AND ".join(f"{quoted(d)} IS NOT NULL" for d in dims) or "TRUE"
+
+
 def same_dim_rows(a: DataFrame, b: DataFrame, dims) -> bool:
     """True when Catalyst proves ``a`` and ``b`` yield the same rows over
     ``dims`` — so every one of those dims has the same labels on both
@@ -191,8 +202,77 @@ def same_dim_rows(a: DataFrame, b: DataFrame, dims) -> bool:
     # selectExpr of quoted names: about half the py4j calls of select(),
     # which matters as the check runs on every merge; quoting keeps a
     # name from being parsed as an expression
-    cols = ["`" + d.replace("`", "``") + "`" for d in dims]
+    cols = [quoted(d) for d in dims]
     pa, pb = (
         df.selectExpr(*cols)._jdf.queryExecution().optimizedPlan() for df in (a, b)
     )
     return pa.sameResult(pb) and pa.deterministic() and pb.deterministic()
+
+
+def _unpruned(plan):
+    """``plan`` with its attribute-only (column-pruning) Projects removed
+    from the top: column pruning cuts one child per consumer, so two
+    aggregates of one source read it through different pruning Projects."""
+    while plan.nodeName() == "Project" and plan.projectList().equals(plan.output()):
+        plan = plan.child()
+    return plan
+
+
+def _unaliased(expr):
+    """The expression an output column computes: its alias's exprId is
+    part of the canonical form, so ``k AS x#1`` never equals ``k AS x#2``."""
+    return expr.child() if expr.nodeName() == "Alias" else expr
+
+
+def paired_values(a: DataFrame, b: DataFrame, dims, b_value: str) -> Optional[DataFrame]:
+    """One relation carrying both cubes' value columns when Catalyst
+    proves that ``a`` and ``b`` are two value columns of the same rows, or
+    None when it cannot.
+
+    xarray applies an elementwise operator to two arrays on identical
+    indexes without any alignment; in long format two cubes derived from
+    one source are two projections of one relation, so joining them on
+    every dim re-reads the source and pays a join only to pair each row
+    with itself. The proof is on the optimized plans: both are the same
+    row-wise operator, a ``Project`` or an ``Aggregate`` with
+    semantically equal grouping keys, over one identical deterministic
+    child (attribute-only pruning Projects below an Aggregate are
+    ignored), and every dim is the same expression on both sides. The
+    identical child means the same attribute ids, i.e. one DataFrame's
+    lineage: two reads of one file are never paired. The result is
+    ``a``'s plan with ``b``'s value expression appended, built without a
+    Spark job; its columns are ``a``'s, then ``b_value`` as ``__v2__``.
+    Rows keep their multiplicity, so duplicate dim labels pair row by
+    row, not as a join's cross product, and rows with a NULL dim label
+    are kept (a join would not match them; see :func:`labelled`). None
+    means "not proven" — callers keep their join."""
+    pa, pb = (df._jdf.queryExecution().optimizedPlan() for df in (a, b))
+    kind = pa.nodeName()
+    if kind not in ("Project", "Aggregate") or pb.nodeName() != kind:
+        return None
+    ca, cb = _unpruned(pa.child()), _unpruned(pb.child())
+    # semanticEquals is false for a nondeterministic dim or grouping key
+    if not (ca.equals(cb) and ca.deterministic()):
+        return None
+    if kind == "Project":
+        la, lb = pa.projectList(), pb.projectList()
+    else:
+        ga, gb = pa.groupingExpressions(), pb.groupingExpressions()
+        n = ga.length()
+        if n != gb.length() or not all(
+            ga.apply(i).semanticEquals(gb.apply(i)) for i in range(n)
+        ):
+            return None
+        la, lb = pa.aggregateExpressions(), pb.aggregateExpressions()
+    cols_a, cols_b = a.columns, b.columns
+    for d in dims:
+        ea = _unaliased(la.apply(cols_a.index(d)))
+        if not ea.semanticEquals(_unaliased(lb.apply(cols_b.index(d)))):
+            return None
+    both = la.appended(lb.apply(cols_b.index(b_value)))
+    plan = pa.copy(both, ca) if kind == "Project" else pa.copy(ga, both, ca, pa.hint())
+    spark = a.sparkSession
+    jdf = JavaClass(
+        "org.apache.spark.sql.classic.Dataset", spark.sparkContext._gateway._gateway_client
+    ).ofRows(spark._jsparkSession, plan)
+    return DataFrame(jdf, spark).toDF(*cols_a, "__v2__")

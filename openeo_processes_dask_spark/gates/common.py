@@ -13,6 +13,48 @@ def _setup(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def _fixture_dir(name: str, sf_dir: str, version: int = 1):
+    """Gate fixture dir (a stream source, a persisted table) with a
+    staleness guard (ADVICE r12 #3) -> ``(dir, needs_write)``.
+
+    The old pattern keyed regeneration on bare directory existence
+    (``if not os.path.isdir(stream_dir)``), so a partially written dir
+    from an aborted run — parquet's ``mode("append")`` second file
+    missing, say — or stale contents left at the same basename were
+    silently replayed. A fixture now counts as valid ONLY when its
+    ``_FIXTURE_COMPLETE`` marker exists and carries the expected
+    version string; the marker is written by :func:`_fixture_done`
+    AFTER the last write finishes, so an aborted generation can never
+    look complete. Anything else is wiped and regenerated. Bump
+    ``version`` in the calling gate whenever its fixture definition
+    changes — the old dir is then invalidated mechanically. The
+    marker filename starts with ``_`` so Spark's file listing ignores
+    it (same convention as ``_SUCCESS``)."""
+    import os
+    import shutil
+    import tempfile
+
+    d = os.path.join(
+        tempfile.gettempdir(), f"{name}_{os.path.basename(sf_dir)}"
+    )
+    try:
+        with open(os.path.join(d, "_FIXTURE_COMPLETE")) as f:
+            if f.read() == f"v{version}":
+                return d, False
+    except OSError:
+        pass
+    shutil.rmtree(d, ignore_errors=True)
+    return d, True
+
+
+def _fixture_done(d: str, version: int = 1) -> None:
+    """Mark a fixture dir complete — call after the LAST write."""
+    import os
+
+    with open(os.path.join(d, "_FIXTURE_COMPLETE"), "w") as f:
+        f.write(f"v{version}")
+
+
 def _events_cube(spark, sf_dir):
     from openeo_processes_dask_spark.sources.load import events_cube
 

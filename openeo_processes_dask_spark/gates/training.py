@@ -9,7 +9,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from .common import _STOPWORDS_SQL, _TOKS, _round6, _setup, _table
+from .common import (
+    _STOPWORDS_SQL,
+    _TOKS,
+    _fixture_dir,
+    _fixture_done,
+    _round6,
+    _setup,
+    _table,
+)
 from .oracle_builders import (
     _corpus_mix_oracle_sql,
     _dedup_clusters_oracle_sql,
@@ -681,6 +689,27 @@ def q_ingest_screen_multimodal(spark, sf_dir):
     )
 
 
+#: Version of the persisted signature table; bump it when the MinHash
+#: family (seed, ``num_hashes``, shingling) or the fixture changes, so a
+#: table written by older code is rewritten instead of read.
+_SIGNATURE_ARCHIVE_VERSION = 1
+
+
+def _signature_archive(seen_sigs: DataFrame, sf_dir: str) -> str:
+    """Write the corpus-side signature table to parquet once, as a
+    production loop would, and return its path. The guarded fixture dir
+    rewrites it when the completion marker is missing or carries another
+    version (an unversioned ``_DONE`` marker included)."""
+    import os
+
+    d, fresh = _fixture_dir("prebanded", sf_dir, _SIGNATURE_ARCHIVE_VERSION)
+    path = os.path.join(d, "sigs")
+    if fresh:
+        seen_sigs.write.mode("overwrite").parquet(path)
+        _fixture_done(d, _SIGNATURE_ARCHIVE_VERSION)
+    return path
+
+
 def q_ingest_screen_prebanded(spark, sf_dir):
     """The composed text ingest verdict against the archive's
     PERSISTED signature table (training/dedup.py ingest_screen): the
@@ -692,9 +721,6 @@ def q_ingest_screen_prebanded(spark, sf_dir):
     ingest_screen — the persisted path must be invisible in the
     result."""
     _setup(spark)
-    import os
-    import tempfile
-
     from openeo_processes_dask_spark.training.dedup import (
         ingest_screen,
         minhash_signatures,
@@ -734,20 +760,9 @@ def q_ingest_screen_prebanded(spark, sf_dir):
         ).alias("fingerprint")
     )
     seen_sigs = minhash_signatures(docs, "doc_id", "text", n=3, num_hashes=64)
-    # materialize the write-once corpus-side signature table (parquet,
-    # as a production loop would); the screen then reads it back
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"prebanded_{os.path.basename(sf_dir)}",
-    )
-    if not os.path.isfile(os.path.join(base, "_DONE")):
-        seen_sigs.write.mode("overwrite").parquet(
-            os.path.join(base, "sigs")
-        )
-        open(os.path.join(base, "_DONE"), "w").close()
     return ingest_screen(
         new, seen_fps,
-        spark.read.parquet(os.path.join(base, "sigs")),
+        spark.read.parquet(_signature_archive(seen_sigs, sf_dir)),
         n=3, num_hashes=64, bands=16, threshold=0.2,
     )
 

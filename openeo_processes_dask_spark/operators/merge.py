@@ -16,6 +16,14 @@ lineage: when Catalyst proves both cubes yield the same dim rows
 (``cube.same_dim_rows`` — e.g. two value cubes cut from one source by the
 same filter_labels), every dim has equal labels and case 1/2 follows with
 no Spark job. Only when that cannot be proven does ``_label_probe`` run.
+
+Case 2 on co-derived cubes is not a join at all: when Catalyst proves the
+two cubes are two value columns of the same rows
+(``cube.paired_values`` — e.g. two selects of one source cut by the same
+extent), the resolver runs over one projection carrying both values, so
+the source is scanned once and no join job runs, as xarray applies the
+resolver elementwise over identical indexes. Rows with a NULL dim label
+are dropped, as the inner join drops them.
 """
 
 from __future__ import annotations
@@ -26,7 +34,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from openeo_processes_dask_spark.core import REGISTRY, process
-from openeo_processes_dask_spark.cube import DataCube, same_dim_rows
+from openeo_processes_dask_spark.cube import (
+    DataCube,
+    labelled,
+    paired_values,
+    quoted,
+    same_dim_rows,
+)
 
 
 from openeo_processes_dask_spark.exceptions import (  # noqa: F401
@@ -123,6 +137,19 @@ def merge_cubes(
     v = cube1.value_col
 
     if dims1 == dims2:
+        dims = list(cube1.meta.dims)
+        paired = (
+            paired_values(cube1.df, cube2.df, dims, cube2.value_col)
+            if resolver is not None
+            else None
+        )
+        if paired is not None:
+            # Case 2 on co-derived cubes: one relation holds both value
+            # columns, so the resolver is elementwise, as in xarray. A NULL
+            # dim label is dropped, as the inner join drops it.
+            merged = resolver(paired[v], paired["__v2__"])
+            out = paired.where(labelled(dims)).withColumn(v, merged)
+            return cube1.with_df(out.selectExpr(*map(quoted, dims), quoted(v)))
         if same_dim_rows(cube1.df, cube2.df, cube1.meta.dims):
             differing: list = []
             probes: dict = {}

@@ -19,7 +19,7 @@ from pyspark.sql import Column, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from openeo_processes_dask_spark.core import process
-from openeo_processes_dask_spark.cube import DataCube
+from openeo_processes_dask_spark.cube import DataCube, quoted
 
 
 def _w(data: DataCube, dim: str) -> WindowSpec:
@@ -205,34 +205,37 @@ def array_interpolate_linear(data: DataCube, dimension: str) -> DataCube:
     weighting. Leading/trailing nodata stays nodata (np.interp interior-only
     semantics per the reference tests)."""
     dim = data.assert_dim(dimension)
-    v = F.col(data.value_col)
-    keep = data.other_dims(dim)
-    lab = F.col(dim)
+    v, lab = quoted(data.value_col), quoted(dim)
+    keep = ", ".join(map(quoted, data.other_dims(dim)))
     # numeric position of a label on the interpolation axis
-    dim_type = dict(data.df.dtypes)[dim]
     pos = (
-        (F.unix_micros(lab.cast("timestamp")) / 1e6)
-        if dim_type.startswith("timestamp")
-        else lab.cast("double")
+        f"unix_micros(CAST({lab} AS TIMESTAMP)) / 1000000.0D"
+        if dict(data.df.dtypes)[dim].startswith("timestamp")
+        else f"CAST({lab} AS DOUBLE)"
     )
-    base = Window.partitionBy(*keep).orderBy(dim) if keep else Window.orderBy(dim)
-    before = base.rowsBetween(Window.unboundedPreceding, -1)
-    after = base.rowsBetween(1, Window.unboundedFollowing)
-    df = data.df.withColumn("__pos__", pos)
-    prev_v = F.last(v, ignorenulls=True).over(before)
-    prev_p = F.last(F.when(v.isNotNull(), F.col("__pos__")), ignorenulls=True).over(
-        before
+    over = f"OVER ({f'PARTITION BY {keep} ' if keep else ''}ORDER BY {lab} ROWS BETWEEN "
+    before = over + "UNBOUNDED PRECEDING AND 1 PRECEDING)"
+    after = over + "1 FOLLOWING AND UNBOUNDED FOLLOWING)"
+    known_pos = f"CASE WHEN {v} IS NOT NULL THEN __pos__ END"
+    # the four window aggregates are materialized once each; the
+    # arithmetic reads them as columns. try_divide: duplicate labels make
+    # __np__ == __pp__; under ANSI mode a plain / would error the whole
+    # job instead of yielding NULL
+    df = (
+        data.df.selectExpr("*", f"{pos} AS __pos__")
+        .selectExpr(
+            "*",
+            f"last({v}, true) {before} AS __pv__",
+            f"last({known_pos}, true) {before} AS __pp__",
+            f"first({v}, true) {after} AS __nv__",
+            f"first({known_pos}, true) {after} AS __np__",
+        )
+        .selectExpr(
+            *map(quoted, data.meta.dims),
+            f"CASE WHEN {v} IS NOT NULL THEN {v}"
+            " WHEN __pv__ IS NOT NULL AND __nv__ IS NOT NULL"
+            " THEN __pv__ + try_divide(__pos__ - __pp__, __np__ - __pp__) * (__nv__ - __pv__)"
+            f" END AS {v}",
+        )
     )
-    next_v = F.first(v, ignorenulls=True).over(after)
-    next_p = F.first(F.when(v.isNotNull(), F.col("__pos__")), ignorenulls=True).over(
-        after
-    )
-    # try_divide: duplicate labels make next_p == prev_p; under ANSI mode a
-    # plain / would error the whole job instead of yielding NULL
-    frac = F.try_divide(F.col("__pos__") - prev_p, next_p - prev_p)
-    interp = prev_v + frac * (next_v - prev_v)
-    filled = F.when(v.isNotNull(), v).otherwise(
-        F.when(prev_v.isNotNull() & next_v.isNotNull(), interp)
-    )
-    out = df.withColumn(data.value_col, filled).drop("__pos__")
-    return data.with_df(out.select(*data.meta.dims, data.value_col))
+    return data.with_df(df)

@@ -293,6 +293,17 @@ def test_interpolate_linear(spark):
     )
 
 
+def test_interpolate_linear_evaluates_each_window_once(spark):
+    """The gap fill needs four window aggregates (last value and position
+    before, first value and position after); the arithmetic reads them as
+    columns, so the physical plan holds exactly four window expressions."""
+    rows = [(x, float(p), None if p % 3 else float(p)) for x in range(2) for p in range(7)]
+    df = spark.createDataFrame(rows, "x int, pos double, value double")
+    out = array_interpolate_linear(DataCube(df, dims=("x", "pos")), "pos")
+    plan = out.df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("windowspecdefinition(") == 4, plan
+
+
 def test_missing_dim_raises(small_cube):
     from openeo_processes_dask_spark.operators.reduce import reduce_dimension
 

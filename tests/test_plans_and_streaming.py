@@ -448,6 +448,38 @@ def test_sessionize_drops_below_watermark_stragglers(spark, tmp_path):
     assert "2024-01-02" not in sessions
 
 
+@pytest.mark.parametrize(
+    "marker, text", [("_DONE", ""), ("_FIXTURE_COMPLETE", "v0")]
+)
+def test_signature_archive_rewrites_a_stale_cache(spark, tmp_path, monkeypatch, marker, text):
+    """ingest_screen_prebanded's persisted signature table sits behind the
+    versioned fixture guard: a table left by older code, under the bare
+    ``_DONE`` marker it used to write or an older version string, is
+    rewritten, and the rewritten one is then reused."""
+    import tempfile
+
+    from openeo_processes_dask_spark.gates.training import _signature_archive
+
+    def sigs(doc_id):
+        return spark.createDataFrame([(doc_id, [7, 8])], "doc_id long, signature array<bigint>")
+
+    def ids(path):
+        return [r["doc_id"] for r in spark.read.parquet(path).collect()]
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    tempfile.tempdir = None  # re-resolve gettempdir() from TMPDIR
+    try:
+        stale = tmp_path / "prebanded_sf0.001"
+        sigs(1).write.parquet(str(stale / "sigs"))
+        (stale / marker).write_text(text)
+        path = _signature_archive(sigs(2), "/data/sf0.001")
+        assert path == str(stale / "sigs") and ids(path) == [2]
+        assert _signature_archive(sigs(3), "/data/sf0.001") == path
+        assert ids(path) == [2]
+    finally:
+        tempfile.tempdir = None
+
+
 def test_fixture_dir_staleness_guard(tmp_path, monkeypatch):
     """ADVICE r12 #3: a stale or partially written stream-fixture dir
     (no completion marker / wrong version) must be wiped and
